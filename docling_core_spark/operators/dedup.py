@@ -295,7 +295,7 @@ def minhash_lsh_duplicates(
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
-        # three consumers below (two id selectors + the verify join) — cut
+        # two consumers below (the cand_ids explode + the verify join) — cut
         # the diamond so the banded self-join runs once
         .localCheckpoint(eager=False)
     )

@@ -18,7 +18,7 @@ import argparse
 import json
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from docling_core_spark.operators.extract import (
     explode_chunks,
@@ -70,11 +70,14 @@ def run_pipeline(
         summary = {"completed": "all", "skipped": 0}
 
     explode_chunks(docs).write.mode("overwrite").parquet(f"{output}/chunks")
-    lineage_metrics(docs).write.mode("overwrite").parquet(f"{output}/lineage")
+    lineage = lineage_metrics(docs)
+    lineage.write.mode("overwrite").parquet(f"{output}/lineage")
 
-    n_docs = docs.count()
-    n_chunks = spark.read.parquet(f"{output}/chunks").count()
-    n_errors = docs.filter("error is not null").count()
+    # the run summary comes from the tiny lineage table, not re-scans of docs
+    totals = spark.read.schema(lineage.schema).parquet(f"{output}/lineage").agg(
+        F.sum("n_pages"), F.sum("n_chunks"), F.sum("n_errors")
+    ).first()
+    n_docs, n_chunks, n_errors = (v or 0 for v in totals)
     return {**summary, "docs": n_docs, "chunks": n_chunks, "errors": n_errors, "output": output}
 
 

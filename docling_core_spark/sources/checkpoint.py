@@ -5,15 +5,17 @@ lineage".  Protocol (Iceberg-style idempotent partition writes, expressed
 over plain parquet so it runs anywhere):
 
 - input is bucketed by ``pmod(xxhash64(url), n_buckets)``;
-- buckets are processed in waves; each wave writes its output under
-  ``out_dir/data/bucket=<b>/`` and then appends one row per completed bucket
-  to the ``out_dir/_progress/`` log (commit point: data before progress, so
-  a crash between the two re-processes the bucket — idempotent because the
-  bucket directory is overwritten whole);
+- buckets are processed in waves; each wave is ONE dynamic-partition-overwrite
+  write into ``out_dir/data/bucket=<b>/`` (the bucket is recomputed from the
+  key column the stage passes through), then one read-back aggregate counts
+  rows and errors per bucket, and one row per bucket of the wave is
+  appended to the ``out_dir/_progress/`` log (commit point: data before
+  progress, so a crash between the two re-processes the bucket — idempotent
+  because the wave's uncommitted bucket directories are replaced whole);
 - resume = anti-join the bucket list against the progress log: only
   unfinished buckets are re-run;
-- per-bucket lineage (pages, errors, bytes, chunks, wall) is recorded in the
-  progress log itself.
+- per-bucket lineage (rows, errors, wave wall) is recorded in the progress
+  log itself; an empty bucket commits with ``rows=0`` so a resume skips it.
 
 At cluster scale the same protocol maps onto Iceberg
 ``REPLACE PARTITIONS`` / dynamic-partition-overwrite commits.
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from pathlib import Path
 from typing import Callable, Optional
@@ -79,39 +82,47 @@ def run_checkpointed(
 ) -> dict:
     """Run stage_fn over pages in resumable bucket waves.
 
-    Returns a summary dict {completed, skipped, waves, rows_out}.
-    Waves keep several buckets in flight so intra-wave parallelism stays at
-    cluster width; a killed job resumes at the first uncommitted bucket.
+    Returns a summary dict {completed, skipped, waves, rows_out, n_buckets}.
+    Each wave is one dynamic-partition-overwrite write of all its buckets;
+    a killed job resumes at the first uncommitted bucket.  stage_fn must
+    pass the ``key`` column through (the output bucket is recomputed from
+    it).  A progress record's ``wall_sec`` is the wall of its wave.
     """
-    bucketed = pages.withColumn("_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+    bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    bucketed = pages.withColumn("_bucket", bucket)
     done = completed_buckets(spark, out_dir, n_buckets=n_buckets)
     todo = [b for b in range(n_buckets) if b not in done]
+    data = Path(out_dir) / "data"
     rows_out = 0
     waves = 0
     for i in range(0, len(todo), buckets_per_wave):
         wave = todo[i : i + buckets_per_wave]
         waves += 1
+        t0 = time.perf_counter()
+        out = stage_fn(bucketed.filter(F.col("_bucket").isin(wave)).drop("_bucket"))
+        if key not in out.columns:
+            raise ValueError(f"stage_fn output lacks the key column {key!r}: {out.columns}")
+        for b in wave:  # uncommitted, so an existing dir is a dead earlier attempt
+            shutil.rmtree(data / f"bucket={b}", ignore_errors=True)
+        out = out.withColumn("bucket", bucket)
+        out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket"
+        ).parquet(str(data))
+        # the known schema skips footer inference (one Spark job) and reads an
+        # all-empty wave, which writes no bucket dir, as zero rows
+        written = spark.read.schema(out.schema).parquet(str(data)).filter(F.col("bucket").isin(wave))
+        errors = F.count("error") if "error" in out.columns else F.lit(0)
+        stats = {b: (0, 0) for b in wave}
+        for r in written.groupBy("bucket").agg(F.count("*"), errors).collect():
+            stats[r[0]] = (r[1], r[2])
+        wall = round(time.perf_counter() - t0, 3)
         for b in wave:
-            t0 = time.perf_counter()
-            part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-            out = stage_fn(part)
-            target = f"{out_dir}/data/bucket={b}"
-            out.write.mode("overwrite").parquet(target)
-            written = spark.read.parquet(target)
-            stats = written.agg(
-                F.count("*").alias("n"),
-                F.count("error").alias("ne") if "error" in written.columns else F.lit(0).alias("ne"),
-            ).first()
-            rows_out += stats["n"]
+            n, ne = stats[b]  # an empty bucket has no dir and commits rows=0
+            rows_out += n
             _commit_bucket(
                 out_dir,
                 b,
-                {
-                    "n_buckets": n_buckets,
-                    "rows": stats["n"],
-                    "errors": stats["ne"],
-                    "wall_sec": round(time.perf_counter() - t0, 3),
-                },
+                {"n_buckets": n_buckets, "rows": n, "errors": ne, "wall_sec": wall},
             )
     return {
         "completed": len(todo),
@@ -242,7 +253,6 @@ def prune_round_state(out_dir: str, before_round: int) -> None:
     AFTER the superseding commit, and a crash mid-prune just leaves
     garbage the next prune retries."""
     import re
-    import shutil
 
     state = Path(out_dir) / "state"
     if not state.is_dir():

@@ -133,7 +133,7 @@ def parent() -> None:
         "gate": ">= 0.8",
         "passed": eff_2_8 >= 0.8,
     }
-    (bench_dir / "scaling.json").write_text(json.dumps(payload, indent=2))
+    (bench_dir / "scaling.json").write_text(json.dumps(payload, indent=2) + "\n")
 
     md = f"""# BENCH / BASELINE — measured numbers
 

@@ -19,7 +19,7 @@ REF_DATA = Path("/root/reference/test/data")
 
 def require_ref_data() -> Path:
     if not REF_DATA.is_dir():
-        pytest.skip("reference GT fixtures not available")
+        pytest.skip("reference GT fixtures not available", allow_module_level=True)
     return REF_DATA
 
 

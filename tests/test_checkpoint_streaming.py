@@ -61,6 +61,29 @@ def test_checkpoint_lineage_records(spark, tmp_path):
     assert all("wall_sec" in r and "errors" in r for r in recs)
 
 
+def test_checkpoint_empty_buckets_commit(spark, tmp_path):
+    # 5 rows into 16 buckets: most buckets get no rows, so no partition dir,
+    # yet each must commit (rows=0) or every resume would re-run it
+    out = str(tmp_path / "run")
+    pages = web_pages_df(spark, SF_DIR).limit(5).cache()
+    summary = run_checkpointed(spark, pages, out, _stage, n_buckets=16)
+    assert summary["completed"] == 16 and summary["rows_out"] == 5
+    recs = [json.loads(p.read_text()) for p in sorted((Path(out) / "_progress").glob("*.json"))]
+    assert sorted(r["bucket"] for r in recs) == list(range(16))
+    assert sum(r["rows"] for r in recs) == 5
+    assert read_output(spark, out).count() == 5
+    again = run_checkpointed(spark, pages, out, _stage, n_buckets=16)
+    assert again["completed"] == 0 and again["skipped"] == 16
+    pages.unpersist()
+
+
+def test_checkpoint_stage_must_keep_key(spark, tmp_path):
+    pages = web_pages_df(spark, SF_DIR).limit(5)
+    with pytest.raises(ValueError, match="key column 'url'"):
+        run_checkpointed(spark, pages, str(tmp_path / "run"), lambda d: d.drop("url"), n_buckets=4)
+    assert not (tmp_path / "run" / "data").exists()
+
+
 def test_streaming_extract(spark, tmp_path):
     from docling_core_spark.streaming.stream import stream_extract
 

@@ -7,6 +7,8 @@ import json
 import subprocess
 import sys
 
+from .conftest import require_ref_data
+
 
 def test_generate_collection_jsonschema(tmp_path):
     from docling_core_spark.model.generate_docs import (
@@ -37,6 +39,7 @@ def test_prepare_directory_clean(tmp_path):
 
 
 def test_cli_entrypoint(tmp_path):
+    require_ref_data()
     out = subprocess.run(
         [sys.executable, "-m", "docling_core_spark.model.generate_docs",
          str(tmp_path / "cli_docs"), "--clean"],

@@ -11,6 +11,8 @@ import pytest
 
 from docling_core_spark.functions.xml_pretty import pretty_xml
 
+from .conftest import require_ref_data
+
 
 def _minidom(compact: str, indent: str) -> str:
     return parseString(compact).documentElement.toprettyxml(indent=indent)
@@ -106,6 +108,7 @@ def _compact_doclang(doc):
 
 
 def test_reference_fixture_docs_match_minidom():
+    require_ref_data()
     from docling_core_spark.model.doc import Doc
 
     checked = 0
