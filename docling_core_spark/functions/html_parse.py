@@ -169,7 +169,10 @@ class _DocHTMLParser(FastTagParserMixin, HTMLParser):
         # inline text accumulation for the current block
         self.block_tag: Optional[str] = None
         self.block_text: list[str] = []
-        self.block_fmt_stack: list[str] = []
+        # open inline tag -> how many are open (only tags with >= 1 are
+        # keys); only membership is ever read, so a count per tag stands in
+        # for a stack that unclosed tags would grow without bound
+        self.block_fmt_open: dict[str, int] = {}
         self.block_link: Optional[str] = None
         self.block_all_linked = True
         self.block_started_with_link = False
@@ -410,13 +413,13 @@ class _DocHTMLParser(FastTagParserMixin, HTMLParser):
             if not self.block_text and not self.li_text:
                 self.block_started_with_link = True
                 self.block_link = href
-            self.block_fmt_stack.append("a")
+            self.block_fmt_open["a"] = self.block_fmt_open.get("a", 0) + 1
             return
         if tag in _INLINE_TAGS:
-            # void inline tags (<wbr>) never get an end tag: pushing them
-            # would desync the stack and leak formatting into later blocks
+            # void inline tags (<wbr>) never get an end tag: counting them
+            # would leave them open and leak formatting into later blocks
             if tag not in _VOID_TAGS:
-                self.block_fmt_stack.append(tag)
+                self.block_fmt_open[tag] = self.block_fmt_open.get(tag, 0) + 1
             return
         if tag in _BLOCK_CONTAINER_TAGS:
             self._flush_block()
@@ -495,12 +498,13 @@ class _DocHTMLParser(FastTagParserMixin, HTMLParser):
             self.in_figcaption = False
             return
         if tag == "a" or tag in _INLINE_TAGS:
-            # pop the last matching occurrence (not a blind pop): stray end
+            # close a matching open tag only (not a blind pop): stray end
             # tags in malformed HTML must not strip an unrelated open format
-            for i in range(len(self.block_fmt_stack) - 1, -1, -1):
-                if self.block_fmt_stack[i] == tag:
-                    del self.block_fmt_stack[i]
-                    break
+            n = self.block_fmt_open.get(tag, 0)
+            if n > 1:
+                self.block_fmt_open[tag] = n - 1
+            elif n == 1:
+                del self.block_fmt_open[tag]
             return
         if tag in _BLOCK_CONTAINER_TAGS:
             self._flush_block()
@@ -520,12 +524,13 @@ class _DocHTMLParser(FastTagParserMixin, HTMLParser):
             return
         if data and not data.isspace():
             self.block_has_text = True
-            if "a" not in self.block_fmt_stack:
+            fmt = self.block_fmt_open
+            if "a" not in fmt:
                 # text outside any <a> means the block is not wholly hyperlinked
                 self.block_all_linked = False
-            if "b" not in self.block_fmt_stack and "strong" not in self.block_fmt_stack:
+            if "b" not in fmt and "strong" not in fmt:
                 self.block_all_bold = False
-            if "i" not in self.block_fmt_stack and "em" not in self.block_fmt_stack:
+            if "i" not in fmt and "em" not in fmt:
                 self.block_all_italic = False
         if self.li_open:
             self.li_text.append(data)
@@ -555,10 +560,9 @@ class _DocHTMLParser(FastTagParserMixin, HTMLParser):
         caption_item = None
         if cap_text:
             caption_item = self.doc.add_text(M.CAPTION, cap_text, prov=_prov(cap_text), content_layer=self._layer())
-            # caption items are wired to the picture, not the body tree:
-            self.doc.body["children"] = [
-                r for r in self.doc.body["children"] if r["$ref"] != caption_item["self_ref"]
-            ]
+            # caption items are wired to the picture, not the body tree
+            # (add_text just appended it as body's last child):
+            self.doc.body["children"].pop()
             caption_item["parent"] = None
         imgs = self.pending_imgs or [{}]
         self.pending_imgs = []
@@ -615,9 +619,7 @@ class _DocHTMLParser(FastTagParserMixin, HTMLParser):
         caption_item = None
         if cap_text:
             caption_item = self.doc.add_text(M.CAPTION, cap_text, prov=_prov(cap_text), content_layer=self._layer())
-            self.doc.body["children"] = [
-                ref for ref in self.doc.body["children"] if ref["$ref"] != caption_item["self_ref"]
-            ]
+            self.doc.body["children"].pop()  # wired to the table below
         tbl = self.doc.add_table(
             data={"table_cells": cells, "num_rows": num_rows, "num_cols": num_cols},
             parent=self._parent(),

@@ -640,7 +640,10 @@ class DocSerializer:
         return columns, body
 
     def _table_triplet_text(self, item: dict, visited: set) -> str:
-        local_visited = set(visited)
+        # only rich (``ref``) cells touch ``visited``: copy it, and merge the
+        # copy back below, only for tables that have one
+        has_ref = any(c.get("ref") for c in (item.get("data") or {}).get("table_cells") or ())
+        local_visited = set(visited) if has_ref else visited
         columns, body = self._table_dataframe(item, local_visited)
         ncols_eff = len(columns) if columns else (len(body[0]) if body else 0)
         table_text = ""
@@ -671,7 +674,7 @@ class DocSerializer:
                 table_text = ". ".join(
                     t for r in body for v in r if (t := str(v).strip())
                 )
-        if table_text:
+        if table_text and has_ref:
             visited.update(local_visited)
         return table_text
 

@@ -45,7 +45,15 @@ def pushdown_pinned_filter(df: DataFrame, cond) -> DataFrame:
     keeps the column alive through pruning.  The guard conjunct is
     vacuously true (partition indexes are 0-based by definition), map-side,
     and dropped immediately — results are identical, only the plan shape
-    changes."""
+    changes.
+
+    The determinism gates are those of Spark 4.1's optimizer rules
+    ``PushDownPredicates`` (its ``PushPredicateThroughNonJoin`` case for
+    Filter over Project) and ``CollapseProject``, both in
+    ``spark-catalyst_2.13-4.1.2.jar``.  If an upgrade relaxes either gate
+    the pin silently stops working;
+    ``tests/test_plan_shapes.py::test_pinned_filter_stays_at_its_stage``
+    checks the plan shape."""
     from pyspark.sql import functions as F
 
     pin = "_nb"

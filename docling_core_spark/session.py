@@ -27,6 +27,16 @@ def get_spark(
     rows (hash positions, feature dims, doc ids) now fill 8192-row batches
     instead of paying the Python-boundary round trip 32x as often.  The
     row cap is a backstop for pathologically tiny rows.
+
+    Python workers run under ``docling_core_spark.pydaemon``
+    (``spark.python.daemon.module``).  pyspark's worker calls
+    ``importlib.invalidate_caches()`` at the start of every task, and the
+    stock zipimporter answers by re-reading all of ``pyspark.zip``'s central
+    directory, once per imported pyspark package: ~200 ms per task on a
+    4-core host, paid by every ``mapInArrow``, pandas UDF and RDD stage.  The
+    daemon re-reads an archive only when its mtime or size changed.  It is
+    importable on the workers because the repo root is exported on
+    ``PYTHONPATH`` below, before the JVM starts.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 32)
@@ -45,6 +55,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.python.daemon.module", "docling_core_spark.pydaemon")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

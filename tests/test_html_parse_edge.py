@@ -42,3 +42,56 @@ def test_stray_inline_end_tag_does_not_strip_other_format():
 def test_markdown_after_embed_unaffected():
     md = export_to_markdown(parse_html(b"<h1>T</h1><embed src=x><p>body</p>"))
     assert "body" in md
+
+
+def _flags(doc):
+    return [(t["text"], t.get("formatting"), t.get("hyperlink")) for t in doc.texts]
+
+
+def _unclosed_bold_page(n: int) -> bytes:
+    return b"<p>lead " + b"x <b>" * n + b"y</p><p>next</p><p><a href=u>link</a></p><p><i>it</i> <b>b</b></p>"
+
+
+def test_many_unclosed_inline_tags_keep_flags():
+    """3,000 never-closed <b>: the open count leaks into later blocks, as it
+    always has; text before the first <b> keeps the first block unbolded."""
+    flags = _flags(parse_html(_unclosed_bold_page(3000)))
+    assert flags[0][1:] == (None, None)
+    assert flags[1:] == [
+        ("next", {"bold": True}, None),
+        ("link", {"bold": True}, "u"),
+        ("it b", {"bold": True}, None),
+    ]
+
+
+def test_stray_end_tag_runs_keep_flags():
+    doc = parse_html(
+        b"<p><b>bold</span></a></b></b></b> plain</p>"
+        b"<p><a href=h><b>all</b></span></a></b></a></p>"
+        + b"</span></a></b>" * 500
+        + b"<p><i>ital</i></p><p>after</p>"
+    )
+    assert _flags(doc) == [
+        ("bold plain", None, None),
+        ("all", {"bold": True}, "h"),
+        ("ital", {"italic": True}, None),
+        ("after", None, None),
+    ]
+
+
+def test_parse_time_linear_in_unclosed_tags():
+    """4x the unclosed tags must cost < 8x the time (best of 3 each); a
+    parser that rescans the open tags per text run costs ~16x."""
+    import time
+
+    def best(html: bytes) -> float:
+        runs = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            parse_html(html)
+            runs.append(time.perf_counter() - t0)
+        return min(runs)
+
+    t1 = best(_unclosed_bold_page(3000))
+    t4 = best(_unclosed_bold_page(12000))
+    assert t4 < 8 * t1, (t1, t4)

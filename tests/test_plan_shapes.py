@@ -357,3 +357,26 @@ def test_fineweb_prep_is_one_scan_one_exchange(docs, monkeypatch):
     assert "Window" not in plan
     assert "SortMergeJoin" not in plan
     assert "partial_min_by" in plan
+
+
+def test_pinned_filter_stays_at_its_stage(spark):
+    """canon.pushdown_pinned_filter keeps the filter above the projection
+    that defines the column it reads, so the defining expression is not
+    inlined into a pushed-down Filter.  Guards the Catalyst determinism
+    gates (PushDownPredicates, CollapseProject) the pin relies on."""
+    from pyspark.sql import functions as F
+
+    from docling_core_spark.operators.canon import pushdown_pinned_filter
+
+    df = spark.range(8).withColumn("y", F.sha2(F.col("id").cast("string"), 256))
+    keep = F.col("y") != "z"
+
+    def optimized(out) -> str:
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    # premise: an unpinned filter gets the expression inlined below the Project
+    assert optimized(df.filter(keep)).count("sha2(") == 2
+    pinned = pushdown_pinned_filter(df, keep)
+    assert optimized(pinned).count("sha2(") == 1
+    assert pinned.columns == df.columns
+    assert sorted(pinned.collect()) == sorted(df.filter(keep).collect())
