@@ -21,6 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from docling_core_spark.operators.extract import (
+    EXTRACT_SCHEMA,
     explode_chunks,
     extract_pages,
     lineage_metrics,
@@ -62,7 +63,7 @@ def run_pipeline(
         summary = run_checkpointed(
             spark, pages, f"{output}/docs", stage, n_buckets=n_buckets
         )
-        docs = read_output(spark, f"{output}/docs")
+        docs = read_output(spark, f"{output}/docs", schema=EXTRACT_SCHEMA)
     else:
         docs = stage(pages)
         docs.write.mode("overwrite").parquet(f"{output}/docs/data")

@@ -5,15 +5,23 @@ lineage".  Protocol (Iceberg-style idempotent partition writes, expressed
 over plain parquet so it runs anywhere):
 
 - input is bucketed by ``pmod(xxhash64(url), n_buckets)``;
+- every uncommitted ``out_dir/data/bucket=<b>/`` directory is deleted once,
+  before the first wave: it can only be a dead earlier attempt;
 - buckets are processed in waves; each wave is ONE dynamic-partition-overwrite
   write into ``out_dir/data/bucket=<b>/`` (the bucket is recomputed from the
-  key column the stage passes through), then one read-back aggregate counts
-  rows and errors per bucket, and one row per bucket of the wave is
-  appended to the ``out_dir/_progress/`` log (commit point: data before
-  progress, so a crash between the two re-processes the bucket — idempotent
-  because the wave's uncommitted bucket directories are replaced whole);
+  key column the stage passes through).  The output crosses one rebalance
+  exchange on the bucket first, so each bucket lands as one file at this
+  scale (about bucket bytes / advisory partition size files at cluster
+  scale) instead of one small file per extract task;
+- then one read-back aggregate over the wave's own bucket dirs counts rows
+  and errors per bucket, and one row per bucket of the wave is appended to
+  the ``out_dir/_progress/`` log (commit point: data before progress);
+- two waves are in flight at once (double buffering): the next wave's tasks
+  fill the cores the current wave's stragglers and driver-side steps leave
+  idle.  Spark's FIFO scheduler still gives the earlier wave priority;
 - resume = anti-join the bucket list against the progress log: only
-  unfinished buckets are re-run;
+  unfinished buckets are re-run.  A crash re-runs every uncommitted bucket,
+  which is at most two waves of work;
 - per-bucket lineage (rows, errors, wave wall) is recorded in the progress
   log itself; an empty bucket commits with ``rows=0`` so a resume skips it.
 
@@ -27,10 +35,13 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 from typing import Callable, Optional
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 
 def _progress_path(out_dir: str) -> Path:
@@ -83,59 +94,95 @@ def run_checkpointed(
     """Run stage_fn over pages in resumable bucket waves.
 
     Returns a summary dict {completed, skipped, waves, rows_out, n_buckets}.
-    Each wave is one dynamic-partition-overwrite write of all its buckets;
-    a killed job resumes at the first uncommitted bucket.  stage_fn must
-    pass the ``key`` column through (the output bucket is recomputed from
-    it).  A progress record's ``wall_sec`` is the wall of its wave.
+    Each wave is one dynamic-partition-overwrite write of all its buckets,
+    rebalanced on the bucket so each bucket is one file at this scale; two
+    waves run at once, each in its own thread whose jobs carry the caller's
+    job group and tags plus a ``checkpoint wave i/n buckets [...]``
+    description.  If a wave raises, no further wave starts, the other
+    in-flight wave finishes and the first error is re-raised.  A killed
+    job resumes by re-running every uncommitted bucket (at most two waves
+    of work).  stage_fn must pass the ``key`` column through (the output
+    bucket is recomputed from it).  A progress record's ``wall_sec`` is the
+    wall of its wave.
     """
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
     bucketed = pages.withColumn("_bucket", bucket)
     done = completed_buckets(spark, out_dir, n_buckets=n_buckets)
     todo = [b for b in range(n_buckets) if b not in done]
     data = Path(out_dir) / "data"
-    rows_out = 0
-    waves = 0
-    for i in range(0, len(todo), buckets_per_wave):
-        wave = todo[i : i + buckets_per_wave]
-        waves += 1
-        t0 = time.perf_counter()
-        out = stage_fn(bucketed.filter(F.col("_bucket").isin(wave)).drop("_bucket"))
-        if key not in out.columns:
-            raise ValueError(f"stage_fn output lacks the key column {key!r}: {out.columns}")
-        for b in wave:  # uncommitted, so an existing dir is a dead earlier attempt
-            shutil.rmtree(data / f"bucket={b}", ignore_errors=True)
-        out = out.withColumn("bucket", bucket)
-        out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            "bucket"
-        ).parquet(str(data))
-        # the known schema skips footer inference (one Spark job) and reads an
-        # all-empty wave, which writes no bucket dir, as zero rows
-        written = spark.read.schema(out.schema).parquet(str(data)).filter(F.col("bucket").isin(wave))
-        errors = F.count("error") if "error" in out.columns else F.lit(0)
-        stats = {b: (0, 0) for b in wave}
-        for r in written.groupBy("bucket").agg(F.count("*"), errors).collect():
-            stats[r[0]] = (r[1], r[2])
-        wall = round(time.perf_counter() - t0, 3)
-        for b in wave:
-            n, ne = stats[b]  # an empty bucket has no dir and commits rows=0
-            rows_out += n
-            _commit_bucket(
-                out_dir,
-                b,
-                {"n_buckets": n_buckets, "rows": n, "errors": ne, "wall_sec": wall},
-            )
+    for b in todo:  # uncommitted, so an existing dir is a dead earlier attempt
+        shutil.rmtree(data / f"bucket={b}", ignore_errors=True)
+    waves = [todo[i : i + buckets_per_wave] for i in range(0, len(todo), buckets_per_wave)]
+    errors: list[BaseException] = []
+
+    def run_wave(n: int, wave: list[int]) -> int:
+        if errors:
+            return 0
+        try:
+            spark.sparkContext.setJobDescription(f"checkpoint wave {n}/{len(waves)} buckets {wave}")
+            t0 = time.perf_counter()
+            out = stage_fn(bucketed.filter(F.col("_bucket").isin(wave)).drop("_bucket"))
+            if key not in out.columns:
+                raise ValueError(f"stage_fn output lacks the key column {key!r}: {out.columns}")
+            out = out.withColumn("bucket", bucket).hint("rebalance", "bucket")
+            out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+                "bucket"
+            ).parquet(str(data))
+            # only this wave's dirs: the other in-flight wave may be moving its
+            # own into data/; an empty bucket writes no dir and commits rows=0
+            dirs = [str(data / f"bucket={b}") for b in wave if (data / f"bucket={b}").is_dir()]
+            stats = {b: (0, 0) for b in wave}
+            if dirs:
+                written = spark.read.schema(out.schema).option("basePath", str(data)).parquet(*dirs)
+                errs = F.count("error") if "error" in out.columns else F.lit(0)
+                for r in written.groupBy("bucket").agg(F.count("*"), errs).collect():
+                    stats[r[0]] = (r[1], r[2])
+            wall = round(time.perf_counter() - t0, 3)
+            for b in wave:
+                n_rows, n_errors = stats[b]
+                _commit_bucket(
+                    out_dir,
+                    b,
+                    {"n_buckets": n_buckets, "rows": n_rows, "errors": n_errors, "wall_sec": wall},
+                )
+            return sum(n_rows for n_rows, _ in stats.values())
+        except BaseException as e:
+            errors.append(e)
+            raise
+
+    # each wave wraps its own copy of the caller's local properties, so one
+    # wave's job description never leaks into the other's jobs
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(run_wave), n, wave)
+            for n, wave in enumerate(waves, 1)
+        ]
+    if errors:
+        raise errors[0]
     return {
         "completed": len(todo),
         "skipped": len(done),
-        "waves": waves,
-        "rows_out": rows_out,
+        "waves": len(waves),
+        "rows_out": sum(f.result() for f in futures),
         "n_buckets": n_buckets,
     }
 
 
-def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read back the committed output across all buckets."""
-    return spark.read.option("basePath", f"{out_dir}/data").parquet(f"{out_dir}/data/bucket=*")
+def read_output(
+    spark: SparkSession, out_dir: str, schema: Optional[StructType] = None
+) -> DataFrame:
+    """Read back the committed output across all buckets.
+
+    ``schema`` is stage_fn's output schema (the ``bucket`` partition column
+    is appended).  Given it, ``data/`` is read without footer inference, and
+    a run whose buckets all came out empty (the waves' writes leave ``data/``
+    with no bucket dir) reads as zero rows.
+    """
+    reader = spark.read
+    if schema is not None:
+        fields = [f for f in schema.fields if f.name != "bucket"]
+        reader = reader.schema(StructType(fields).add("bucket", IntegerType()))
+    return reader.parquet(f"{out_dir}/data")
 
 
 # ---------------------------------------------------------------------------

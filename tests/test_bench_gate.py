@@ -4,9 +4,10 @@ records its decision, and honors the skip env."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import bench  # noqa: E402
 
 

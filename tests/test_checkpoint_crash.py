@@ -29,6 +29,7 @@ from docling_core_spark.sources.checkpoint import (
 from docling_core_spark.sources.web_pages import web_pages_df
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO_ROOT = Path(__file__).resolve().parents[1]
 N_BUCKETS = 6
 CRASH_AT_COMMIT = 3  # SIGKILL before the 3rd commit: 2 committed, 1 orphan data dir
 
@@ -81,7 +82,7 @@ def test_sigkill_mid_wave_then_resume_is_byte_identical(spark, tmp_path):
 
     proc = subprocess.run(
         [sys.executable, "-c", _CRASH_SCRIPT, crashed],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         capture_output=True,
         text=True,
         timeout=420,

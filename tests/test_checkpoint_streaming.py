@@ -84,6 +84,51 @@ def test_checkpoint_stage_must_keep_key(spark, tmp_path):
     assert not (tmp_path / "run" / "data").exists()
 
 
+def test_checkpoint_failing_stage_starts_no_further_wave(spark, tmp_path):
+    # 4 waves, two in flight: both in-flight waves may call stage_fn, but
+    # once one raises no further wave starts, and nothing is left behind
+    out = tmp_path / "run"
+    pages = web_pages_df(spark, SF_DIR).limit(20)
+    calls = []
+
+    def failing(part):
+        calls.append(1)
+        raise RuntimeError("stage failed")
+
+    with pytest.raises(RuntimeError, match="stage failed"):
+        run_checkpointed(spark, pages, str(out), failing, n_buckets=8, buckets_per_wave=2)
+    assert 1 <= len(calls) <= 2
+    assert not list(out.glob("_progress/*.json"))
+    assert not list(out.glob("data/bucket=*"))
+
+
+def test_checkpoint_wave_jobs_keep_job_group(spark, tmp_path):
+    # wave jobs run in pool threads; they must still carry the caller's job
+    # group (perfbench counts pipeline jobs by group) and a per-wave
+    # description, and the caller's own description must stay untouched
+    sc = spark.sparkContext
+    group = "ckpt-group-test"
+    pages = web_pages_df(spark, SF_DIR).limit(20)
+    sc.setJobGroup(group, "checkpoint job group test")
+    try:
+        summary = run_checkpointed(
+            spark, pages, str(tmp_path / "run"), _stage, n_buckets=4, buckets_per_wave=2
+        )
+        assert sc.getLocalProperty("spark.job.description") == "checkpoint job group test"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert summary["waves"] == 2 and summary["rows_out"] == 20
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) >= 2 * summary["waves"]
+    store = sc._jsc.sc().statusStore()
+    descriptions = {store.job(j).description().getOrElse(None) for j in jobs}
+    assert {
+        "checkpoint wave 1/2 buckets [0, 1]",
+        "checkpoint wave 2/2 buckets [2, 3]",
+    } <= descriptions
+
+
 def test_streaming_extract(spark, tmp_path):
     from docling_core_spark.streaming.stream import stream_extract
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from .conftest import require_ref_data
 
@@ -45,7 +46,7 @@ def test_cli_entrypoint(tmp_path):
          str(tmp_path / "cli_docs"), "--clean"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parents[1],
     )
     assert out.returncode == 0, out.stderr
     produced = json.loads((tmp_path / "cli_docs" / "DoclingDocument.json").read_text())

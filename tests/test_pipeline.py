@@ -56,6 +56,20 @@ def test_pipeline_checkpointed_summary_and_layout(spark, pages, tmp_path):
         actual = spark.read.parquet(str(bucket_dir)).count() if bucket_dir.is_dir() else 0
         assert actual == rec["rows"]
     assert sum(r["rows"] for r in recs) == 60
+    # the wave output is rebalanced on the bucket: one file per bucket dir
+    for bucket_dir in data.glob("bucket=*"):
+        assert len(list(bucket_dir.glob("*.parquet"))) == 1, bucket_dir
+
+
+def test_pipeline_checkpointed_empty_input(spark, pages, tmp_path):
+    # no rows means no bucket dir at all; every bucket still commits rows=0
+    out = str(tmp_path / "out")
+    summary = run_pipeline(spark, pages.limit(0), out, checkpointed=True, n_buckets=4)
+    assert summary["completed"] == 4
+    assert summary["docs"] == summary["chunks"] == summary["errors"] == 0
+    again = run_pipeline(spark, pages.limit(0), out, checkpointed=True, n_buckets=4)
+    assert again["skipped"] == 4 and again["completed"] == 0
+    assert again["docs"] == again["chunks"] == again["errors"] == 0
 
 
 def test_pipeline_uncheckpointed_summary(spark, pages, tmp_path):
