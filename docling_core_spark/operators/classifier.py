@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Row, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import norm_words
+from docling_core_spark.operators.hashing import hash60
 from docling_core_spark.operators.textstats import lang_score_expr
 
 #: hashed feature dimensions (oracle-scale default; 2^18 at crawl scale)
@@ -80,9 +81,7 @@ def _features(docs: DataFrame, dims: int) -> DataFrame:
     ).cast("int")
     dim_of = F.transform(
         F.col("ws"),
-        lambda t: F.pmod(
-            F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"), F.lit(dims)
-        ).cast("int"),
+        lambda t: F.pmod(hash60(t), F.lit(dims)).cast("int"),
     )
     return base.select(
         "doc_id", label.alias("label"), F.array_sort(F.array_distinct(dim_of)).alias("dims")

@@ -8,10 +8,9 @@ Scale design (the 100 TB shape):
   content: doc n-grams explode map-side, hit-test against the broadcast set
   in a broadcast hash join, and roll up per doc_id with map-side partial
   aggregation, so the only exchange carries ~one row per (doc, partition).
-- N-gram hashing uses the 60-bit md5 prefix (dedup._token_hash60), which is
-  reproducible bit-for-bit in DuckDB — the whole operator is
-  value-hash-oracle-checkable.  At pure scale (no oracle) swap xxhash64 in:
-  same plan, cheaper hash.
+- N-gram hashing uses the 60-bit md5 prefix (operators.hashing.hash60),
+  which is reproducible bit-for-bit in DuckDB — the whole operator is
+  value-hash-oracle-checkable.
 - For extreme benchmark sets (10^8+ n-grams) where even the broadcast is too
   big, the same plan holds with the broadcast join replaced by a Bloom-filter
   semi-join (`spark.sql.optimizer.runtime.bloomFilter.enabled` does this
@@ -23,40 +22,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
-from docling_core_spark.operators.dedup import _token_hash60, norm_words, shingle_grams
+from docling_core_spark.operators.dedup import norm_words, shingle_grams
+from docling_core_spark.operators.hashing import hash60, hash60_sql
 
 DECONTAM_NGRAM = 13  # GPT-3-style eval-overlap n-gram size
 
 
-def _gram_hash(gram, hash_fn: str):
-    if hash_fn == "xxhash64":
-        return F.xxhash64(gram)
-    return _token_hash60(gram)
-
-
-def _hashed_gram_rows(docs: DataFrame, n: int, hash_fn: str = "md5_60") -> DataFrame:
+def _hashed_gram_rows(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, hs: array<bigint>) — distinct hashed word n-grams, built
-    over a materializing words projection (see dedup.norm_words).
-
-    hash_fn: "md5_60" (default; reproducible in DuckDB, the oracle path) or
-    "xxhash64" (JVM-native, ~cheaper — the pure-scale path; contamination
-    DECISIONS are identical since both gates are exact set membership)."""
+    over a materializing words projection (see dedup.norm_words)."""
     return docs.select("doc_id", norm_words(F.col("text")).alias("w")).select(
         "doc_id",
         F.transform(
             F.array_distinct(shingle_grams(F.col("w"), n)),
-            lambda g: _gram_hash(g, hash_fn),
+            hash60,
         ).alias("hs"),
     )
 
 
-def benchmark_ngram_set(
-    bench_docs: DataFrame, n: int = DECONTAM_NGRAM, hash_fn: str = "md5_60"
-) -> DataFrame:
+def benchmark_ngram_set(bench_docs: DataFrame, n: int = DECONTAM_NGRAM) -> DataFrame:
     """Distinct hashed n-grams of the benchmark/eval documents — the small
     side of the broadcast join (one column ``g``)."""
     return (
-        _hashed_gram_rows(bench_docs, n, hash_fn)
+        _hashed_gram_rows(bench_docs, n)
         .select(F.explode("hs").alias("g"))
         .distinct()
     )
@@ -67,7 +55,6 @@ def decontaminate(
     bench_docs: DataFrame,
     n: int = DECONTAM_NGRAM,
     max_contaminated_frac: float = 0.0,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Per-document benchmark-overlap report:
     (doc_id, n_ngrams, n_contaminated, contaminated_frac, keep).
@@ -79,9 +66,9 @@ def decontaminate(
     copies of benchmark items are still caught.
     """
     bench = F.broadcast(
-        benchmark_ngram_set(bench_docs, n, hash_fn).withColumn("_hit", F.lit(1))
+        benchmark_ngram_set(bench_docs, n).withColumn("_hit", F.lit(1))
     )
-    exploded = _hashed_gram_rows(docs, n, hash_fn).select(
+    exploded = _hashed_gram_rows(docs, n).select(
         "doc_id",
         F.size("hs").alias("n_ngrams"),
         F.explode_outer("hs").alias("g"),
@@ -132,7 +119,7 @@ hashed AS (
                   ELSE [array_to_string(words[i+1:i+{n}], ' ')
                         for i in range(0, len(words) - {n} + 1)]
              END),
-           g -> ('0x' || substr(md5(g), 1, 15))::BIGINT) AS hs
+           g -> {hash60_sql("g")}) AS hs
   FROM normed
 ),
 bench AS (

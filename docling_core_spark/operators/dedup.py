@@ -23,11 +23,16 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.hashing import (
+    fingerprint,
+    fingerprint_sql,
+    hash60,
+    hash60_sql,
+    sample_gate,
+    sample_gate_sql,
+)
 
 NORM = lambda c: F.regexp_replace(F.lower(c), r"[^a-z0-9 ]", "")  # noqa: E731
-
-
-_HASH60_MAX = 1 << 60
 
 
 def with_synthetic_duplicates(
@@ -46,15 +51,7 @@ def with_synthetic_duplicates(
     every engine the same known duplicate groups.  Map-only; both branches
     read one scan each (the clone branch's sampling predicate pushes down).
     """
-    threshold = int(rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    clones = docs.filter(bucket < F.lit(threshold)).select(
+    clones = docs.filter(sample_gate("doc_id", seed, rate)).select(
         (F.col("doc_id") + id_offset).alias("doc_id"), "text"
     )
     return docs.select("doc_id", "text").unionByName(clones)
@@ -67,12 +64,11 @@ def with_synthetic_duplicates_sql(
     id_offset: int = 1_000_000,
 ) -> str:
     """The with_synthetic_duplicates transformation as a DuckDB CTE body."""
-    threshold = int(rate * _HASH60_MAX)
     return f"""
   SELECT doc_id, text FROM {table}
   UNION ALL
   SELECT doc_id + {id_offset} AS doc_id, text FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {sample_gate_sql("doc_id", seed, rate)}
 """
 
 
@@ -86,9 +82,7 @@ def exact_duplicates(docs: DataFrame, max_group_ids: int = 256) -> DataFrame:
     materialize an unbounded aggregation value at 100x data; n_docs still
     counts the full group.
     """
-    fp = docs.select(
-        "doc_id", F.md5(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]", "")).alias("fingerprint")
-    )
+    fp = docs.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
     return (
         fp.groupBy("fingerprint")
         .agg(
@@ -115,7 +109,7 @@ SELECT fingerprint,
        MIN(doc_id) AS keep_doc_id,
        array_to_string(list_sort(list(doc_id))[1:{max_group_ids}], '|') AS doc_ids
 FROM (
-  SELECT doc_id, md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint
+  SELECT doc_id, {fingerprint_sql("text")} AS fingerprint
   FROM {table}
 )
 GROUP BY fingerprint
@@ -210,7 +204,7 @@ def cap_hot_buckets(
     ever holds a whole hot bucket (the row_number cap this replaces sorted
     the ENTIRE bucket in one task — the exact skew it was defending against).
 
-    The gate hash is the cross-engine md5-60 (see _token_hash60) so the
+    The gate hash is the cross-engine hash60 (operators.hashing) so the
     DuckDB / pure-python oracles replicate the surviving set exactly.
     """
     # diamond reuse: the banded frame feeds BOTH the count phase and the
@@ -224,7 +218,7 @@ def cap_hot_buckets(
         banded.groupBy(*keys).count().filter(F.col("count") > max_bucket_size)
     )
     gate_src = F.concat_ws(":", F.col(id_col), *[F.col(k) for k in keys])
-    gate = F.conv(F.substring(F.md5(gate_src), 1, 15), 16, 10).cast("long")
+    gate = hash60(gate_src)
     return (
         banded.join(F.broadcast(counts), list(keys), "left")
         .filter(
@@ -487,7 +481,7 @@ def dedup_against(docs: DataFrame, known: DataFrame) -> DataFrame:
     filter prunes the probe side when the history is selective).  Returns
     (doc_id, fingerprint) for the surviving new documents.
     """
-    fp = F.md5(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]", ""))
+    fp = fingerprint(F.col("text"))
     new_fp = docs.select("doc_id", fp.alias("fingerprint"))
     known_fp = known.select(fp.alias("fingerprint")).distinct()
     return (
@@ -501,7 +495,7 @@ def dedup_against_sql(
     table: str = "documents", known_modulus: int = 4
 ) -> str:
     """DuckDB oracle for dedup_against(docs, docs where doc_id % m == 0)."""
-    fp = "md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))"
+    fp = fingerprint_sql("text")
     return f"""
 SELECT doc_id, {fp} AS fingerprint
 FROM {table}
@@ -597,41 +591,20 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 -> always positive in a signed long
 SIMHASH_BANDS = 4  # 4 x 15-bit bands: Hamming <= 3 implies >= 1 equal band
 
 
-def _token_hash60(col):
-    """60-bit cross-engine token hash: first 15 hex chars of md5 as a bigint.
-
-    Identical in Spark (conv(substr(md5,1,15),16,10)) and DuckDB
-    (('0x'||substr(md5,1,15))::BIGINT), which is what makes the SimHash
-    pipeline oracle-checkable end to end.  At pure-scale (no oracle) swap in
-    xxhash64 — same plan shape, cheaper hash.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def simhash_signatures(
-    docs: DataFrame, bits: int = SIMHASH_BITS, hash_fn: str = "md5_60"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """SimHash per document via token-hash bit voting (no UDF).
 
     Each distinct token votes +1/-1 per bit of its 60-bit hash; the signature
     sign-thresholds the votes.  One hash-aggregate shuffle on doc_id; the 60
     conditional sums are Catalyst-native whole-stage-codegen expressions.
     Tokens weighted by frequency are a trivial extension (drop array_distinct).
-
-    hash_fn "md5_60" (default) is reproducible in DuckDB — the oracle path;
-    "xxhash64" is the pure-scale path: JVM-native, no md5+conv string work,
-    masked to the low 60 bits so band extraction is unchanged.
+    The token hash is the cross-engine hash60, so DuckDB reproduces every
+    signature bit.
     """
     tokens = docs.select(
         "doc_id", F.explode(F.array_distinct(F.split(F.trim(NORM(F.col("text"))), r"\s+"))).alias("tok")
     )
-    if hash_fn == "xxhash64":
-        tok_hash = F.xxhash64(F.col("tok")).bitwiseAND(
-            F.shiftleft(F.lit(1).cast("long"), SIMHASH_BITS) - 1
-        )
-    else:
-        tok_hash = _token_hash60(F.col("tok"))
-    h = tokens.withColumn("h", tok_hash)
+    h = tokens.withColumn("h", hash60(F.col("tok")))
     one = F.lit(1).cast("long")
     votes = [
         F.sum(
@@ -650,7 +623,6 @@ def simhash_duplicates(
     docs: DataFrame,
     max_hamming: int = 3,
     max_bucket_size: int = 256,
-    hash_fn: str = "md5_60",
 ) -> DataFrame:
     """Near-duplicate pairs at SimHash Hamming distance <= max_hamming.
 
@@ -660,13 +632,11 @@ def simhash_duplicates(
     buckets are thinned via the skew-safe two-phase hash gate
     (cap_hot_buckets, mirrored exactly in the oracle SQL) so a
     mass-boilerplate corpus cannot go quadratic.  Verified with
-    popcount(xor).  hash_fn: "md5_60" (cross-engine, the oracle path) or
-    "xxhash64" (JVM-native, cheaper — the pure-scale path; same plan shape).
-    Returns (doc_a, doc_b, hamming).
+    popcount(xor).  Returns (doc_a, doc_b, hamming).
     """
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
-    sig = simhash_signatures(docs, hash_fn=hash_fn)
+    sig = simhash_signatures(docs)
     band_structs = [
         F.struct(
             F.lit(k).alias("band"),
@@ -700,6 +670,8 @@ def simhash_duplicates_sql(
     """DuckDB oracle SQL for simhash_duplicates (same hash, banding, and cap)."""
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
+    # the cap gate in `bands` spells hash60_sql out by hand: its line breaks
+    # are part of the pinned oracle text (tests/test_oracle_sql_text.py)
     return f"""
 WITH toks AS (
   SELECT DISTINCT doc_id,
@@ -707,7 +679,7 @@ WITH toks AS (
   FROM {table}
 ),
 hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks
+  SELECT doc_id, {hash60_sql("tok")} AS h FROM toks
 ),
 votes AS (
   SELECT doc_id, t.b,

@@ -31,8 +31,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import norm_words
-
-_HASH60_MAX = 1 << 60
+from docling_core_spark.operators.hashing import (
+    hash60,
+    hash60_sql,
+    sample_gate,
+    sample_gate_sql,
+    seeded_hash60,
+    seeded_hash60_sql,
+)
 
 DSIR_BUCKETS = 1024
 DSIR_ALPHA = 1.0
@@ -43,18 +49,11 @@ _GUMBEL_SEED = "dsirg"
 _GUMBEL_MOD = 1 << 52  # u mantissa bits: (h % 2^52) + 0.5 is double-exact
 
 
-def _hash60(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def _bucket_rows(docs: DataFrame, buckets: int, hash_fn: str = "md5") -> DataFrame:
+def _bucket_rows(docs: DataFrame, buckets: int) -> DataFrame:
     """(doc_id, bucket) one row per unigram AND bigram occurrence (hashed).
 
     The token array materializes into its own projection first (no-CSE
-    rule), bigrams via the shifted-slice zip (the element_at trap).
-    ``hash_fn="xxhash64"`` is the pure-scale gram hash (JVM-native, no
-    md5+conv string work — the dedup.py toggle pattern); md5-60 stays the
-    DuckDB-oracle path."""
+    rule), bigrams via the shifted-slice zip (the element_at trap)."""
     toks = docs.select(
         "doc_id",
         F.filter(norm_words(F.col("text")), lambda x: x != F.lit("")).alias("ws"),
@@ -67,11 +66,7 @@ def _bucket_rows(docs: DataFrame, buckets: int, hash_fn: str = "md5") -> DataFra
     grams = toks.select(
         "doc_id", F.explode(F.concat(F.col("ws"), bigrams)).alias("g")
     )
-    bucket = (
-        F.pmod(F.xxhash64(F.col("g")), F.lit(buckets))
-        if hash_fn == "xxhash64"
-        else F.pmod(_hash60(F.col("g")), F.lit(buckets))
-    )
+    bucket = F.pmod(hash60(F.col("g")), F.lit(buckets))
     return grams.select("doc_id", bucket.cast("int").alias("bucket"))
 
 
@@ -82,14 +77,10 @@ def dsir_select(
     rate: float = DSIR_RATE,
     seed: str = DSIR_SEED,
     k: int = DSIR_K,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """(doc_id, log_ratio, gumbel_key, selected): importance weights under
-    the target/raw hashed-ngram models + Gumbel top-k selection flags.
-    ``hash_fn="xxhash64"`` swaps the gram hash for the JVM-native one (the
-    pure-scale path, same plan shape; the target-gate and Gumbel hashes
-    stay md5 — per-doc, not per-gram, so they are not the hot path)."""
-    rows = _bucket_rows(docs, buckets, hash_fn)
+    the target/raw hashed-ngram models + Gumbel top-k selection flags."""
+    rows = _bucket_rows(docs, buckets)
     # Aggregate the raw gram rows to per-(doc, bucket) counts FIRST — the
     # partial (map-side) aggregation collapses the explode output before it
     # ever shuffles — and cut the diamond THERE: both corpus models and the
@@ -103,8 +94,7 @@ def dsir_select(
         .agg(F.count("*").alias("c"))
         .localCheckpoint(eager=False)
     )
-    tgt_gate = _hash60(F.concat(F.col("doc_id").cast("string"), F.lit(seed)))
-    tgt_rows = docs.filter(tgt_gate < F.lit(int(rate * _HASH60_MAX))).select("doc_id")
+    tgt_rows = docs.filter(sample_gate("doc_id", seed, rate)).select("doc_id")
     target = (
         doc_counts.join(F.broadcast(tgt_rows), "doc_id")
         .groupBy("bucket")
@@ -155,10 +145,7 @@ def dsir_select(
     # dividing the raw 60-bit hash would round the top 128 values to
     # exactly 1.0, where -ln(-ln(u)) is NULL in Spark but +inf in DuckDB
     u = (
-        F.pmod(
-            _hash60(F.concat(F.col("doc_id").cast("string"), F.lit(_GUMBEL_SEED))),
-            F.lit(_GUMBEL_MOD),
-        ).cast("double")
+        F.pmod(seeded_hash60("doc_id", _GUMBEL_SEED), F.lit(_GUMBEL_MOD)).cast("double")
         + F.lit(0.5)
     ) / F.lit(float(_GUMBEL_MOD))
     keyed = weights.select(
@@ -193,7 +180,6 @@ def dsir_select_sql(
     seed: str = DSIR_SEED,
     k: int = DSIR_K,
 ) -> str:
-    threshold = int(rate * _HASH60_MAX)
     tok = (
         "list_filter(string_split_regex(trim(regexp_replace(lower(text), "
         "'[^a-z0-9 ]', '', 'g')), ' +'), x -> x <> '')"
@@ -211,12 +197,12 @@ grams AS (
 ),
 rows_b AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(g), 1, 15))::BIGINT % {buckets} AS INT) AS bucket
+         CAST({hash60_sql("g")} % {buckets} AS INT) AS bucket
   FROM grams
 ),
 tgt_docs AS (
   SELECT doc_id FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {sample_gate_sql("doc_id", seed, rate)}
 ),
 target AS (
   SELECT bucket, count(*) AS ct FROM rows_b
@@ -246,7 +232,7 @@ weights AS (
 keyed AS (
   SELECT doc_id, log_ratio,
          round(log_ratio + (-ln(-ln(
-           (((('0x' || substr(md5(doc_id || '{_GUMBEL_SEED}'), 1, 15))::BIGINT) % {_GUMBEL_MOD})::DOUBLE + 0.5)
+           ((({seeded_hash60_sql("doc_id", _GUMBEL_SEED)}) % {_GUMBEL_MOD})::DOUBLE + 0.5)
            / {float(_GUMBEL_MOD)}
          ))), 6) AS gumbel_key
   FROM weights

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order, pushdown_pinned_filter
+from docling_core_spark.operators.hashing import fingerprint, fingerprint_sql
 from docling_core_spark.operators.pii import pii_redact, pii_redact_sql
 from docling_core_spark.operators.textstats import (
     c4_demo_docs,
@@ -134,10 +135,7 @@ def fineweb_prep(
         ),
         (F.col("n_kept_lines") > 0) & F.col("doc_ok"),
     )
-    fingered = lined.withColumn(
-        "fingerprint",
-        F.md5(F.regexp_replace(F.lower(F.col("filtered_text")), r"[^a-z0-9]", "")),
-    )
+    fingered = lined.withColumn("fingerprint", fingerprint(F.col("filtered_text")))
     # the chain's ONLY exchange: min_by representative with map-side
     # partials (the corpus_prep skew contract — a mass-boilerplate
     # fingerprint combines locally, never a window sort in one task)
@@ -212,7 +210,7 @@ c4 AS ({c4_body}),
 fingered AS (
   SELECT c.doc_id, k.url, q.n_words, c.n_lines, c.n_kept_lines,
          c.filtered_text,
-         md5(regexp_replace(lower(c.filtered_text), '[^a-z0-9]', '', 'g')) AS fingerprint
+         {fingerprint_sql("c.filtered_text")} AS fingerprint
   FROM c4 c
   JOIN quality_text q USING (doc_id)
   JOIN kept_url k USING (doc_id)

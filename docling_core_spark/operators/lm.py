@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import NORM
-
-_HASH60_MAX = 1 << 60
+from docling_core_spark.operators.hashing import sample_gate, sample_gate_sql
 
 #: interpolation weight of the bigram maximum-likelihood term
 LM_LAMBDA = 0.8
@@ -47,19 +46,13 @@ LM_REF_SEED = "lmref"
 UNK = "<unk>"
 
 
-def _hash60(col):
-    """Cross-engine 60-bit md5 prefix (DuckDB: ('0x'||substr(md5(x),1,15))::BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
 def _tokens(col):
     """Normalized non-empty token array (shared with the dedup family)."""
     return F.filter(F.split(F.trim(NORM(col)), r"\s+"), lambda x: x != F.lit(""))
 
 
 def _ref_docs(docs: DataFrame, rate: float, seed: str) -> DataFrame:
-    gate = _hash60(F.concat(F.col("doc_id").cast("string"), F.lit(seed)))
-    return docs.filter(gate < F.lit(int(rate * _HASH60_MAX)))
+    return docs.filter(sample_gate("doc_id", seed, rate))
 
 
 def _bigram_rows(docs: DataFrame) -> DataFrame:
@@ -262,11 +255,10 @@ _TOK_SQL = (
 def _common_ctes(
     table: str, vocab_size: int, rate: float, seed: str
 ) -> str:
-    threshold = int(rate * _HASH60_MAX)
     return f"""
 WITH ref AS (
   SELECT doc_id, text FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {sample_gate_sql("doc_id", seed, rate)}
 ),
 ref_tok AS (
   SELECT doc_id, unnest(ts) AS w, generate_subscripts(ts, 1) AS pos

@@ -24,6 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.hashing import sample_gate
 
 
 def _round5_ge_boundary(eps: float) -> float:
@@ -286,9 +287,6 @@ def ann_lsh_topk(
     )
 
 
-_HASH60_MAX = 1 << 60
-
-
 def with_synthetic_duplicate_vectors(
     embeddings: DataFrame,
     rate: float = 0.1,
@@ -302,15 +300,7 @@ def with_synthetic_duplicate_vectors(
     Same md5-sampling rule as dedup.with_synthetic_duplicates; mirrored in
     the single-process expected oracle (oracle_expected._build_similarity).
     """
-    threshold = int(rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(seed))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    clones = embeddings.filter(bucket < F.lit(threshold)).select(
+    clones = embeddings.filter(sample_gate("vec_id", seed, rate)).select(
         (F.col("vec_id") + id_offset).alias("vec_id"), "label", "embedding"
     )
     return embeddings.select("vec_id", "label", "embedding").unionByName(clones)

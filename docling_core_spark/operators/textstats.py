@@ -10,6 +10,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.hashing import (
+    HASH60_MAX,
+    fingerprint,
+    fingerprint_sql,
+    hash60,
+    hash60_sql,
+    sample_gate,
+    sample_gate_sql,
+    seeded_hash60,
+    seeded_hash60_sql,
+)
 
 # small fixed stopword sets per language (public lists, truncated for
 # deterministic SQL-parity between Spark and the DuckDB oracle)
@@ -161,14 +172,15 @@ ORDER BY doc_id
 
 def fingerprints(docs: DataFrame) -> DataFrame:
     """Normalized-content md5 fingerprint per document."""
-    norm = F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]", "")
-    return docs.select("doc_id", F.md5(norm).alias("fingerprint")).transform(lambda d: canonical_order(d, "doc_id"))
+    return docs.select("doc_id", fingerprint(F.col("text")).alias("fingerprint")).transform(
+        lambda d: canonical_order(d, "doc_id")
+    )
 
 
 def fingerprints_sql(table: str = "documents") -> str:
     """DuckDB oracle SQL for fingerprints."""
     return f"""
-SELECT doc_id, md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fingerprint
+SELECT doc_id, {fingerprint_sql("text")} AS fingerprint
 FROM {table}
 ORDER BY doc_id
 """
@@ -288,9 +300,6 @@ ORDER BY doc_id
 """
 
 
-_HASH60_MAX = 1 << 60
-
-
 def sample_by_hash(docs: DataFrame, rate: float = 0.1, seed: str = "s42") -> DataFrame:
     """Deterministic content-independent downsampling: keep a document iff
     its 60-bit md5(doc_id || seed) falls under rate * 2^60.
@@ -298,29 +307,21 @@ def sample_by_hash(docs: DataFrame, rate: float = 0.1, seed: str = "s42") -> Dat
     The training-data staple for reproducible corpus subsets: map-only (the
     filter is pushed to the scan), no RNG state, identical selection on any
     cluster size or partitioning, and re-runs/new seeds compose.  The
-    60-bit md5 prefix is exactly reproducible in DuckDB
-    (('0x' || substr(md5(x),1,15))::BIGINT)."""
-    threshold = int(rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    60-bit md5 prefix is exactly reproducible in DuckDB (operators.hashing)."""
     return (
-        docs.select("doc_id", bucket.alias("hash60"))
-        .filter(F.col("hash60") < F.lit(threshold))
+        docs.filter(sample_gate("doc_id", seed, rate))
+        .select("doc_id", seeded_hash60("doc_id", seed).alias("hash60"))
         .transform(lambda d: canonical_order(d, "doc_id"))
     )
 
 
 def sample_by_hash_sql(table: str = "documents", rate: float = 0.1, seed: str = "s42") -> str:
     """DuckDB oracle SQL for sample_by_hash."""
-    threshold = int(rate * _HASH60_MAX)
     return f"""
 SELECT doc_id,
-       ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT AS hash60
+       {seeded_hash60_sql("doc_id", seed)} AS hash60
 FROM {table}
-WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+WHERE {sample_gate_sql("doc_id", seed, rate)}
 ORDER BY doc_id
 """
 
@@ -567,13 +568,7 @@ def corpus_prep_pipeline(
     corpus is keyword salad, not natural prose, and the canonical threshold
     keeps zero of it — a vacuous driver check.  Real deployments pass 2.
     """
-    threshold = int(sample_rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-    sampled = docs.filter(bucket < F.lit(threshold))
+    sampled = docs.filter(sample_gate("doc_id", seed, sample_rate))
     # intermediate stages run canonical=False: composition keeps exactly one
     # deterministic sort, at the very end
     cleaned = text_clean(sampled, canonical=False)
@@ -598,10 +593,7 @@ def corpus_prep_pipeline(
         ),
         F.col("keep"),
     )
-    fingered = quality.withColumn(
-        "fingerprint",
-        F.md5(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]", "")),
-    )
+    fingered = quality.withColumn("fingerprint", fingerprint(F.col("text")))
     # min-doc_id representative per fingerprint via min_by hash-agg — one
     # scan, one fingerprint shuffle, AND map-side partial aggregation, so a
     # mass-boilerplate fingerprint (hundreds of millions of rows at crawl
@@ -630,7 +622,6 @@ def corpus_prep_pipeline_sql(
     min_stopword_hits: int = 1,
 ) -> str:
     """DuckDB oracle for corpus_prep_pipeline — the same chain as CTEs."""
-    threshold = int(sample_rate * _HASH60_MAX)
     clean_sql = text_clean_sql(table)
     gopher_sql = gopher_quality_filter_sql("cleaned_as_text", min_stopword_hits=min_stopword_hits)
     # strip the trailing ORDER BY of the fragments when nesting
@@ -639,7 +630,7 @@ def corpus_prep_pipeline_sql(
     return f"""
 WITH sampled AS (
   SELECT * FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {sample_gate_sql("doc_id", seed, sample_rate)}
 ),
 cleaned AS ({clean_body.replace(f'FROM {table}', 'FROM sampled')}),
 cleaned_as_text AS (
@@ -648,7 +639,7 @@ cleaned_as_text AS (
 quality AS ({gopher_body}),
 survivors AS (
   SELECT q.doc_id, q.n_words, c.n_chars_clean,
-         md5(regexp_replace(lower(c.text), '[^a-z0-9]', '', 'g')) AS fingerprint
+         {fingerprint_sql("c.text")} AS fingerprint
   FROM quality q JOIN cleaned_as_text c USING (doc_id)
   WHERE q.keep
 )
@@ -810,9 +801,7 @@ def winnowing_fingerprints(
         n_grams > 0,
         F.transform(
             F.sequence(F.lit(1), n_grams),
-            lambda i: F.conv(
-                F.substring(F.md5(F.substr(F.col("t"), i, F.lit(k))), 1, 15), 16, 10
-            ).cast("long"),
+            lambda i: hash60(F.substr(F.col("t"), i, F.lit(k))),
         ),
     ).otherwise(F.array().cast("array<long>"))
     hashed = base.select("doc_id", F.length("t").alias("n_chars"), hashes.alias("h"))
@@ -856,7 +845,7 @@ WITH base AS (
 hashed AS (
   SELECT doc_id, length(t) AS n_chars,
          CASE WHEN length(t) >= {k}
-              THEN [('0x' || substr(md5(substr(t, CAST(i AS INT), {k})), 1, 15))::BIGINT
+              THEN [{hash60_sql(f"substr(t, CAST(i AS INT), {k})")}
                     for i in range(1, length(t) - {k} + 2)]
               ELSE [] END AS h
   FROM base
@@ -1109,14 +1098,10 @@ def mix_corpora(
         .otherwise(F.lit(0.0))
         .alias("rate"),
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    bucket = seeded_hash60("doc_id", seed)
     return (
         with_tok.join(F.broadcast(rates), "lang")
-        .filter(bucket.cast("double") < F.col("rate") * F.lit(float(_HASH60_MAX)))
+        .filter(bucket.cast("double") < F.col("rate") * F.lit(float(HASH60_MAX)))
         .select("doc_id", "lang", "ws_tokens", F.round("rate", 9).alias("rate"))
         .transform(lambda d: canonical_order(d, "doc_id"))
     )
@@ -1154,8 +1139,8 @@ rates AS (
 )
 SELECT w.doc_id, w.lang, w.ws_tokens, round(r.rate, 9) AS rate
 FROM with_tok w JOIN rates r USING (lang)
-WHERE (('0x' || substr(md5(w.doc_id || '{seed}'), 1, 15))::BIGINT)::DOUBLE
-      < r.rate * {float(_HASH60_MAX)}
+WHERE ({seeded_hash60_sql("w.doc_id", seed)})::DOUBLE
+      < r.rate * {float(HASH60_MAX)}
 ORDER BY w.doc_id
 """
 

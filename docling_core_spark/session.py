@@ -37,8 +37,11 @@ def get_spark(
     daemon re-reads an archive only when its mtime or size changed.  It is
     importable on the workers because the repo root is exported on
     ``PYTHONPATH`` below, before the JVM starts.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the CPUs this
+    process may run on.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 32)
 
     # Executor python workers must be able to import this package regardless

@@ -102,6 +102,8 @@ def stateful_exact_dedup(
         StructType,
     )
 
+    from docling_core_spark.operators.hashing import fingerprint
+
     out_schema = StructType(
         [
             StructField("fingerprint", StringType()),
@@ -112,7 +114,7 @@ def stateful_exact_dedup(
     state_schema = StructType([StructField("seen", BooleanType())])
 
     keyed = pages_stream.select(
-        F.md5(F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]", "")).alias("fingerprint"),
+        fingerprint(F.col(text_col)).alias("fingerprint"),
         F.col(key_col).alias("url"),
     ).groupBy("fingerprint")
 

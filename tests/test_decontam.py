@@ -53,19 +53,6 @@ def test_decontaminate_frac_threshold(corpus, bench):
     assert not out[3].keep  # 100% contaminated stays out
 
 
-def test_decontaminate_xxhash_scale_path_same_decisions(corpus, bench):
-    """The pure-scale hash (JVM xxhash64) must reach identical contamination
-    decisions as the oracle hash (60-bit md5): the gate is exact set
-    membership, so any injective hash yields the same counts."""
-    from docling_core_spark.operators.decontam import decontaminate
-
-    md5_out = sorted(map(tuple, decontaminate(corpus, bench).collect()))
-    xx_out = sorted(
-        map(tuple, decontaminate(corpus, bench, hash_fn="xxhash64").collect())
-    )
-    assert md5_out == xx_out
-
-
 def test_decontaminate_plan_broadcasts_bench(spark, monkeypatch):
     from docling_core_spark.operators.decontam import decontaminate, eval_subset
 

@@ -41,10 +41,10 @@ def test_target_slice_scores_higher_on_average(docs):
     # documents must average a higher log-ratio than the rest (the DSIR
     # premise: weights rank target-likeness)
     rows = dsir_select(docs).collect()
-    from docling_core_spark.operators.dsir import DSIR_RATE, DSIR_SEED, _HASH60_MAX
+    from docling_core_spark.operators.dsir import DSIR_RATE, DSIR_SEED
     import hashlib
 
-    thr = int(DSIR_RATE * _HASH60_MAX)
+    thr = int(DSIR_RATE * (1 << 60))
     in_t, out_t = [], []
     for r in rows:
         h = int(hashlib.md5(f"{r['doc_id']}{DSIR_SEED}".encode()).hexdigest()[:15], 16)
@@ -71,16 +71,3 @@ def test_plan_shape(docs):
     # join), so the final plan reads an RDD-backed scan — the aggregates
     # with partials live in the checkpointed subplan (pinned by parity)
     assert "ExistingRDD" in plan
-
-
-def test_xxhash64_toggle_same_shape(docs):
-    """The pure-scale gram hash (JVM xxhash64, the dedup.py toggle pattern)
-    keeps the contract: same schema, exactly k selected, md5 stays the
-    oracle path.  Bucket assignment differs by design (different hash
-    family), so only structural properties are compared."""
-    out = dsir_select(docs, hash_fn="xxhash64")
-    assert out.columns == ["doc_id", "log_ratio", "gumbel_key", "selected"]
-    assert out.filter("selected = 1").count() == 100
-    assert out.count() == docs.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan and "TakeOrderedAndProject" in plan
