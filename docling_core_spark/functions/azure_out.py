@@ -47,6 +47,10 @@ class AzureParams(MarkdownParams):
 class AzureSerializer(DocSerializer):
     """Azure-JSON dispatch engine (accumulates, then dumps once)."""
 
+    # key-value and form items have no Azure form
+    _MISSING_KEY_VALUE = ""
+    _MISSING_FORM = ""
+
     params: AzureParams
 
     def __init__(self, doc: Doc, params: Optional[AzureParams] = None):
@@ -158,33 +162,6 @@ class AzureSerializer(DocSerializer):
 
     def serialize_meta(self, item: dict) -> SerResult:
         return _res()
-
-    def serialize(self, item=None, list_level=0, is_inline_scope=False, visited=None,
-                  _nested_in_table=False) -> SerResult:
-        my_item = item if item is not None else self.doc.body
-        arr = M.ref_array(my_item["self_ref"]) if item is not None else None
-        if arr in ("key_value_items", "form_items"):
-            (visited or set()).add(my_item["self_ref"])
-            return _res()
-        return super().serialize(
-            item=item, list_level=list_level, is_inline_scope=is_inline_scope,
-            visited=visited, _nested_in_table=_nested_in_table,
-        )
-
-    def get_parts(self, item=None, list_level=0, is_inline_scope=False, visited=None):
-        """Accumulating serializers return empty text; keep all parts anyway."""
-        parts = []
-        my_visited = visited if visited is not None else set()
-        for node, _lvl in self._iter_pb(
-            node=item, traverse_pictures=self.params.traverse_pictures, add_page_breaks=False
-        ):
-            sr = node["self_ref"]
-            if sr in my_visited:
-                continue
-            my_visited.add(sr)
-            self.serialize(item=node, list_level=list_level,
-                           is_inline_scope=is_inline_scope, visited=my_visited)
-        return parts
 
     def serialize_doc(self, parts: list[SerResult]) -> SerResult:
         for page_key in sorted(self.doc.pages, key=lambda k: int(k)):

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import copy
 import re
-import unicodedata
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field, replace
 from typing import Any, Optional
@@ -37,8 +36,11 @@ from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
     SerResult,
-    _PB_RE,
+    _PB_FMT,
     _res,
+    _wrap,
+    get_text_direction,
+    replace_page_breaks,
 )
 from docling_core_spark.model import doc as M
 from docling_core_spark.model.doc import Doc
@@ -149,10 +151,6 @@ def _pretty(compact: str, indent: str) -> str:
         return parseString(compact).documentElement.toprettyxml(indent=indent)
 
 
-def _wrap(text: str, tag: str) -> str:
-    return f"<{tag}>{text}</{tag}>"
-
-
 def _attr_escape(value: str) -> str:
     return value.replace("&", "&amp;").replace('"', "&quot;")
 
@@ -165,22 +163,6 @@ def _quantize(value: int, resolution: int) -> int:
     if value > resolution:
         return resolution - 1
     return value
-
-
-def get_text_direction(text: str) -> str:
-    """LTR/RTL heuristic (reference types/doc/utils.py:226-234)."""
-    if not text:
-        return "ltr"
-    if text.isascii():
-        # no ASCII codepoint has bidirectional class R/AL — exact fast path
-        # for the dominant web-text case (one C call vs one per character)
-        return "ltr"
-    rtl = {"R", "AL"}
-    bidi = unicodedata.bidirectional
-    # list-comp (one C-level pass) instead of a genexpr: generator frame
-    # resumptions were a visible share of the mixed-script profile
-    n_rtl = sum([bidi(c) in rtl for c in text])
-    return "rtl" if bidi(text[0]) in rtl or n_rtl > len(text) / 2 else "ltr"
 
 
 def location_tokens_for_bbox(
@@ -204,6 +186,9 @@ class DocLangSerializer(DocSerializer):
     """DocLang document serializer over the dict model."""
 
     _SERIALIZE_DELIM = "\n"
+    # legacy graph items serialize empty, as in the reference
+    _MISSING_KEY_VALUE = ""
+    _MISSING_FORM = ""
 
     def __init__(self, doc: Doc, params: Optional[DocLangParams] = None, **overrides: Any):
         if params is None:
@@ -325,12 +310,6 @@ class DocLangSerializer(DocSerializer):
         if custom_text:
             parts.append(custom_text)
         return "".join(parts)
-
-    def _meta_name_allowed(self, name: str) -> bool:
-        p = self.params
-        return (p.allowed_meta_names is None or name in p.allowed_meta_names) and (
-            name not in p.blocked_meta_names
-        )
 
     # -- style hooks (formatting wraps) ---------------------------------------
 
@@ -542,9 +521,7 @@ class DocLangSerializer(DocSerializer):
             for i, frag_res in enumerate(frags):
                 if i > 0 and prov[i - 1]["page_no"] != prov[i]["page_no"]:
                     self._suppressed_page_breaks.add((prov[i - 1]["page_no"], prov[i]["page_no"]))
-                    out.append(
-                        f"#_#_DOCLING_DOC_PAGE_BREAK_{prov[i - 1]['page_no']}_{prov[i]['page_no']}_#_#"
-                    )
+                    out.append(_PB_FMT.format(prov[i - 1]["page_no"], prov[i]["page_no"]))
                 out.append(frag_res.text)
             return _res("".join(out), item)
         return self._serialize_single_text(item, visited, is_inline_scope, None)
@@ -678,13 +655,8 @@ class DocLangSerializer(DocSerializer):
             prov = it.get("prov") or []
             return prov[0].get("page_no") if prov else None
 
-        ordered = False
-        children = item.get("children") or []
-        if children:
-            first = self.doc.resolve(children[0]["$ref"])
-            ordered = bool(first.get("label") == M.LIST_ITEM and first.get("enumerated"))
-
-        for ref in children:
+        ordered = self._is_enumerated(item)
+        for ref in item.get("children") or []:
             child = self.doc.resolve(ref["$ref"])
             sr = child["self_ref"]
             if M.is_list_group(child):
@@ -743,7 +715,7 @@ class DocLangSerializer(DocSerializer):
             if block and page_no is not None and current_page is not None and page_no != current_page:
                 out.append(f"{threaded_open}{delim.join(block)}{delim}</list>")
                 self._suppressed_page_breaks.add((current_page, page_no))
-                out.append(f"#_#_DOCLING_DOC_PAGE_BREAK_{current_page}_{page_no}_#_#")
+                out.append(_PB_FMT.format(current_page, page_no))
                 block = []
             if text:
                 block.append(text)
@@ -950,9 +922,7 @@ class DocLangSerializer(DocSerializer):
                 )
                 if idp > 0 and prov[idp - 1]["page_no"] != pr["page_no"]:
                     self._suppressed_page_breaks.add((prov[idp - 1]["page_no"], pr["page_no"]))
-                    out.append(
-                        f"#_#_DOCLING_DOC_PAGE_BREAK_{prov[idp - 1]['page_no']}_{pr['page_no']}_#_#"
-                    )
+                    out.append(_PB_FMT.format(prov[idp - 1]["page_no"], pr["page_no"]))
                 out.append(tres.text)
             return _res("".join(out), item)
         return self._serialize_single_table(item)
@@ -1087,23 +1057,13 @@ class DocLangSerializer(DocSerializer):
             return _res(text, sub)
         return _res()
 
-    def serialize(self, item=None, list_level=0, is_inline_scope=False, visited=None,
-                  _nested_in_table=False):
-        my_item = item
-        if my_item is not None and "_pb" in my_item:
-            key = tuple(my_item["_pb"])
-            if key in self._suppressed_page_breaks:
-                self._suppressed_page_breaks.discard(key)
-                return _res()
-        if my_item is not None and M.ref_array(my_item.get("self_ref", "")) in (
-            "key_value_items",
-            "form_items",
-        ):
-            return _res()  # graph serialization out of scope v1
-        return super().serialize(
-            item=item, list_level=list_level, is_inline_scope=is_inline_scope,
-            visited=visited, _nested_in_table=_nested_in_table,
-        )
+    def _serialize_page_break(self, item: dict) -> SerResult:
+        # a break already emitted inside a threaded item is dropped, once
+        key = tuple(item["_pb"])
+        if key in self._suppressed_page_breaks:
+            self._suppressed_page_breaks.discard(key)
+            return _res()
+        return super()._serialize_page_break(item)
 
     # -- document assembly ----------------------------------------------------------
 
@@ -1126,7 +1086,7 @@ class DocLangSerializer(DocSerializer):
             )
         text = delim.join(x.text for x in parts if x.text)
         if p.add_page_break:
-            text = _PB_RE.sub("<page_break/>", text)
+            text = replace_page_breaks(text, "<page_break/>")
         text = f"{open_token}{head}{text}</doclang>"
 
         if not p.add_content:

@@ -17,6 +17,9 @@ from docling_core_spark.functions.serializers import (
     MarkdownParams,
     SerResult,
     _res,
+    _wrap,
+    best_prediction,
+    replace_page_breaks,
 )
 from docling_core_spark.model import doc as M
 from docling_core_spark.model.doc import Doc
@@ -67,10 +70,6 @@ _CODE_LANG_TOKENS = {
     "SQL", "Scala", "Scheme", "Swift", "TypeScript", "unknown", "VisualBasic",
     "XML", "YAML",
 }
-
-
-def _wrap(text: str, tag: str) -> str:
-    return f"<{tag}>{text}</{tag}>"
 
 
 def loc_token(val: float, rnorm: int = 500, self_closing: bool = False) -> str:
@@ -141,6 +140,10 @@ class DocTagsParams(MarkdownParams):
 class DocTagsSerializer(DocSerializer):
     """DocTags dispatch engine (shares traversal core with the markdown one)."""
 
+    _FALLBACK_DELIM = "\n"
+    _MISSING_TEXT = ""
+    _MISSING_FORM = ""
+
     params: DocTagsParams
 
     def __init__(self, doc: Doc, params: Optional[DocTagsParams] = None):
@@ -201,9 +204,8 @@ class DocTagsSerializer(DocSerializer):
             if loc:
                 parts.append(loc)
         if p.add_content:
-            children = item.get("children") or []
-            child_group = self.doc.resolve(children[0]["$ref"]) if len(children) == 1 else None
-            if item.get("text", "") == "" and child_group is not None and M.is_inline_group(child_group):
+            child_group = self._inline_child(item)
+            if child_group is not None:
                 text_part = self.serialize(item=child_group, visited=visited).text
             else:
                 text_part = item.get("text", "")
@@ -339,13 +341,7 @@ class DocTagsSerializer(DocSerializer):
             predicted_class = None
             cls = meta.get("classification")
             if cls and cls.get("predictions"):
-                preds = cls["predictions"]
-                best, best_conf = None, None
-                for pr in preds:
-                    c = pr.get("confidence")
-                    if c is not None and (best_conf is None or c > best_conf):
-                        best, best_conf = pr, c
-                predicted_class = (best or preds[0]).get("class_name")
+                predicted_class = best_prediction(cls["predictions"]).get("class_name")
             if predicted_class:
                 body += f"<{predicted_class}>"
                 if predicted_class in _CHART_CLASSES:
@@ -377,10 +373,7 @@ class DocTagsSerializer(DocSerializer):
             return _res("", parts)
         text = delim.join(_wrap(part.text, "list_item") for part in parts)
         text = f"{text}{delim}"
-        children = item.get("children") or []
-        first = self.doc.resolve(children[0]["$ref"]) if children else None
-        enumerated = bool(first and first.get("label") == M.LIST_ITEM and first.get("enumerated"))
-        return _res(_wrap(text, "ordered_list" if enumerated else "unordered_list"), parts)
+        return _res(_wrap(text, "ordered_list" if self._is_enumerated(item) else "unordered_list"), parts)
 
     def _serialize_inline_group(self, item: dict, visited: set, list_level: int) -> SerResult:
         p = self.params
@@ -426,12 +419,6 @@ class DocTagsSerializer(DocSerializer):
             text = _wrap(f"{text}{delim}", "inline")
         return _res(text, parts)
 
-    def _serialize_fallback(self, item: dict, visited: set) -> SerResult:
-        if M.is_group(item):
-            parts = self.get_parts(item=item, visited=visited)
-            return _res("\n".join(x.text for x in parts if x.text), parts)
-        return _res()
-
     # -- key-value items --------------------------------------------------------------
 
     def _serialize_key_value(self, item: dict) -> SerResult:
@@ -464,36 +451,13 @@ class DocTagsSerializer(DocSerializer):
                 body += cap.text
         return _res(_wrap(body, "key_value_region"), item)
 
-    # -- dispatch hook for kv/form ------------------------------------------------------
-
-    def serialize(self, item=None, list_level=0, is_inline_scope=False, visited=None,
-                  _nested_in_table=False) -> SerResult:
-        my_item = item if item is not None else self.doc.body
-        if item is not None and M.ref_array(my_item["self_ref"]) == "key_value_items":
-            my_visited = visited if visited is not None else set()
-            my_visited.add(my_item["self_ref"])
-            return self._serialize_key_value(my_item)
-        if item is not None and M.ref_array(my_item["self_ref"]) == "form_items":
-            my_visited = visited if visited is not None else set()
-            my_visited.add(my_item["self_ref"])
-            return _res()
-        return super().serialize(
-            item=item,
-            list_level=list_level,
-            is_inline_scope=is_inline_scope,
-            visited=visited,
-            _nested_in_table=_nested_in_table,
-        )
-
     # -- document wrapper ------------------------------------------------------------------
 
     def serialize_doc(self, parts: list[SerResult]) -> SerResult:
         delim = self._delim()
         text = delim.join(x.text for x in parts if x.text)
         if self.params.add_page_break:
-            import re as _re
-
-            text = _re.sub(r"#_#_DOCLING_DOC_PAGE_BREAK_(\d+)_(\d+)_#_#", "<page_break>", text)
+            text = replace_page_breaks(text, "<page_break>")
         return _res(f"<doctag>{text}{delim}</doctag>", parts)
 
 

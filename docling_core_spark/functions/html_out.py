@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import html as _html
 import re
-import unicodedata
 from dataclasses import dataclass
 from typing import Optional
 
@@ -19,22 +18,12 @@ from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
     SerResult,
+    _PB_RE,
     _res,
+    get_text_direction,
 )
 from docling_core_spark.model import doc as M
 from docling_core_spark.model.doc import Doc
-
-
-def get_text_direction(text: str) -> str:
-    """LTR/RTL detection (reference utils.py:226-234)."""
-    if not text:
-        return "ltr"
-    if text.isascii():
-        # no ASCII codepoint has bidirectional class R/AL — exact fast path
-        return "ltr"
-    rtl = {"R", "AL"}
-    rtl_chars = sum(unicodedata.bidirectional(c) in rtl for c in text)
-    return "rtl" if unicodedata.bidirectional(text[0]) in rtl or rtl_chars > len(text) / 2 else "ltr"
 
 
 def tag_with_dir(html_tag: str, text: str, attrs: Optional[dict] = None) -> str:
@@ -145,6 +134,9 @@ class HTMLSerializer(DocSerializer):
     """HTML dispatch engine sharing the traversal core."""
 
     _SERIALIZE_DELIM = "\n"
+    _FALLBACK_DELIM = "\n"
+    _MISSING_TEXT = "<!-- Unhandled item type -->"
+    _ANNOTATION_DELIM = " "
 
     params: HTMLParams
 
@@ -187,11 +179,8 @@ class HTMLSerializer(DocSerializer):
         label = item.get("label")
         post_processed = False
 
-        children = item.get("children") or []
-        child_group = self.doc.resolve(children[0]["$ref"]) if len(children) == 1 else None
-        has_inline_repr = (
-            item.get("text", "") == "" and child_group is not None and M.is_inline_group(child_group)
-        )
+        child_group = self._inline_child(item)
+        has_inline_repr = child_group is not None
         if has_inline_repr:
             text = self.serialize(item=child_group, visited=visited).text
             post_processed = True
@@ -303,39 +292,17 @@ class HTMLSerializer(DocSerializer):
             text = f"<{tag}>{text}</{tag}>"
         return SerResult(text, _res("", results).spans)
 
-    def serialize_annotations(self, item: dict) -> SerResult:
-        parts = []
-        for ann in item.get("annotations", ()):
-            kind = ann.get("kind")
-            ann_text = None
-            if kind == "classification":
-                classes = ann.get("predicted_classes") or []
-                if classes:
-                    ann_text = str(classes[0].get("class_name", "")).replace("_", " ")
-            elif kind == "description":
-                ann_text = ann.get("text")
-            elif kind == "molecule_data":
-                ann_text = ann.get("smi")
-            if ann_text:
-                dir_str = ' dir="rtl"' if get_text_direction(ann_text) == "rtl" else ""
-                parts.append(
-                    f'<div data-annotation-kind="{kind}"{dir_str}>{_html.escape(ann_text)}</div>'
-                )
-        return _res(" ".join(t for t in parts if t), item)
+    def _fmt_annotation(self, kind: str, text: str) -> str:
+        dir_str = ' dir="rtl"' if get_text_direction(text) == "rtl" else ""
+        return f'<div data-annotation-kind="{kind}"{dir_str}>{_html.escape(text)}</div>'
 
     # -- meta --------------------------------------------------------------------
 
-    def _meta_field_html(self, meta: dict, name: str) -> Optional[str]:
+    def _meta_field_text(self, meta: dict, name: str) -> Optional[str]:
         val = meta.get(name)
-        if val is None:
-            return None
-        is_markup = False
-        txt: Optional[str] = None
-        if name == "summary":
-            txt = val.get("text")
-        elif name == "language":
-            txt = val.get("code")
-        elif name == "entities":
+        if name == "language" and val is not None:
+            return val.get("code")
+        if name == "entities" and val is not None:
             bits = []
             for m in val.get("mentions", []):
                 label, charspan, t = m.get("label"), m.get("charspan"), m.get("text", "")
@@ -347,41 +314,26 @@ class HTMLSerializer(DocSerializer):
                     bits.append(f"{t} ([{charspan[0]},{charspan[1]}])")
                 else:
                     bits.append(t)
-            txt = ", ".join(bits)
-        elif name in ("keywords", "topics"):
-            txt = ", ".join(val.get("values", []))
-        elif name == "description":
-            txt = val.get("text")
-        elif name == "classification":
-            preds = val.get("predictions") or []
-            best, best_conf = None, None
-            for pr in preds:
-                c = pr.get("confidence")
-                if c is not None and (best_conf is None or c > best_conf):
-                    best, best_conf = pr, c
-            main = best if best is not None else (preds[0] if preds else None)
-            if main:
-                txt = self._humanize(main.get("class_name", ""))
-        elif name == "molecule":
-            txt = val.get("smi")
-        elif name == "tabular_chart":
+            return ", ".join(bits)
+        return super()._meta_field_text(meta, name)
+
+    def _serialize_meta_field(self, meta: dict, name: str) -> Optional[str]:
+        val = meta.get(name)
+        if val is None:
+            return None
+        if name == "tabular_chart":
             data = val.get("chart_data")
-            if data:
-                t = self._table_html({"data": data, "self_ref": "#/_tmp/0", "prov": []}, None).strip()
-                if t:
-                    txt = t
-                    is_markup = True
+            table = {"data": data, "self_ref": "#/_tmp/0", "prov": []}
+            txt = self._table_html(table, None).strip() if data else None
         elif name == "code":
             lang = (val.get("language") or "").lower()
             code_class = f' class="language-{_html.escape(lang)}"' if lang else ""
             txt = f'<pre class="docling-meta-code"><code{code_class}>{_html.escape(val.get("text", ""))}</code></pre>'
-            is_markup = True
         else:
-            txt = str(val or "") or None
+            txt = self._meta_field_text(meta, name)
+            txt = _html.escape(txt, quote=False) if txt else None
         if not txt:
             return None
-        if not is_markup:
-            txt = _html.escape(txt, quote=False)
         ename = _html.escape(name, quote=True)
         return (
             f'<div class="docling-meta-field" data-meta-name="{ename}">'
@@ -390,31 +342,10 @@ class HTMLSerializer(DocSerializer):
             f"</div>"
         )
 
-    def serialize_meta(self, item: dict) -> SerResult:
-        from docling_core_spark.functions.serializers import _META_FIELD_ORDER
-
-        meta = item.get("meta")
-        if not meta or item["self_ref"] in self.get_excluded_refs():
-            return _res("", item if M.is_doc_item(item) else None)
-        p = self.params
-        keys = [k for k in _META_FIELD_ORDER if k in meta]
-        keys += [k for k in meta if k not in _META_FIELD_ORDER]
-        parts = []
-        for k in keys:
-            if p.allowed_meta_names is not None and k not in p.allowed_meta_names:
-                continue
-            if k in p.blocked_meta_names:
-                continue
-            t = self._meta_field_html(meta, k)
-            if t:
-                parts.append(t)
-        if not parts:
-            return _res("", item if M.is_doc_item(item) else None)
-        inner = "".join(parts)
-        return _res(
-            f'<details class="docling-meta"><summary>Meta</summary>{inner}</details>',
-            item if M.is_doc_item(item) else None,
-        )
+    def _join_meta_fields(self, fields: list[str]) -> str:
+        if not fields:
+            return ""
+        return f'<details class="docling-meta"><summary>Meta</summary>{"".join(fields)}</details>'
 
     # -- tables ---------------------------------------------------------------------
 
@@ -552,6 +483,12 @@ class HTMLSerializer(DocSerializer):
             return f"<li>{cell_text}</li>"
         return ""
 
+    def _serialize_key_value(self, item: dict) -> SerResult:
+        return self._serialize_graph_item(item, "key-value-region")
+
+    def _serialize_form(self, item: dict) -> SerResult:
+        return self._serialize_graph_item(item, "form-container")
+
     def _serialize_graph_item(self, item: dict, class_name: str) -> SerResult:
         parts: list[SerResult] = []
         if item["self_ref"] not in self.get_excluded_refs():
@@ -571,10 +508,7 @@ class HTMLSerializer(DocSerializer):
         )
         text = "\n".join(x.text for x in parts if x.text)
         if text:
-            children = item.get("children") or []
-            first = self.doc.resolve(children[0]["$ref"]) if children else None
-            enumerated = bool(first and first.get("label") == M.LIST_ITEM and first.get("enumerated"))
-            tag = "ol" if enumerated else "ul"
+            tag = "ol" if self._is_enumerated(item) else "ul"
             text = f"<{tag}>\n{text}\n</{tag}>"
         return _res(text, parts)
 
@@ -584,34 +518,6 @@ class HTMLSerializer(DocSerializer):
         if text:
             text = f"<span class='inline-group'>{text}</span>"
         return _res(text, parts)
-
-    def _serialize_fallback(self, item: dict, visited: set) -> SerResult:
-        if M.is_group(item):
-            parts = self.get_parts(item=item, visited=visited)
-            return _res("\n".join(x.text for x in parts if x.text), parts)
-        return _res("<!-- Unhandled item type -->", item if M.is_doc_item(item) else None)
-
-    # -- dispatch hook for kv/form --------------------------------------------------------
-
-    def serialize(self, item=None, list_level=0, is_inline_scope=False, visited=None,
-                  _nested_in_table=False) -> SerResult:
-        my_item = item if item is not None else self.doc.body
-        arr = M.ref_array(my_item["self_ref"]) if item is not None else None
-        if arr == "key_value_items":
-            my_visited = visited if visited is not None else set()
-            my_visited.add(my_item["self_ref"])
-            return self._serialize_graph_item(my_item, "key-value-region")
-        if arr == "form_items":
-            my_visited = visited if visited is not None else set()
-            my_visited.add(my_item["self_ref"])
-            return self._serialize_graph_item(my_item, "form-container")
-        return super().serialize(
-            item=item,
-            list_level=list_level,
-            is_inline_scope=is_inline_scope,
-            visited=visited,
-            _nested_in_table=_nested_in_table,
-        )
 
     # -- document scaffold ------------------------------------------------------------------
 
@@ -639,15 +545,13 @@ class HTMLSerializer(DocSerializer):
         return "\n".join(parts) if p.prettify else "".join(parts)
 
     def serialize_doc(self, parts: list[SerResult]) -> SerResult:
-        import re as _re
-
         html_parts = ["<!DOCTYPE html>", "<html>", self._generate_head(), "<body>"]
         content = "\n".join(x.text for x in parts if x.text)
         if self.params.output_style == "split_page":
             pages: dict[int, str] = {}
             prev_end = 0
             next_page = None
-            for m in _re.finditer(r"#_#_DOCLING_DOC_PAGE_BREAK_(\d+)_(\d+)_#_#", content):
+            for m in _PB_RE.finditer(content):
                 prev_page, next_page = int(m.group(1)), int(m.group(2))
                 pages[prev_page] = content[prev_end : m.start()]
                 prev_end = m.end()

@@ -15,6 +15,7 @@ from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
     SerResult,
+    _PB_RE,
     _res,
 )
 from docling_core_spark.model import doc as M
@@ -74,6 +75,10 @@ class LaTeXSerializer(DocSerializer):
     """LaTeX dispatch engine sharing the traversal core."""
 
     _SERIALIZE_DELIM = "\n"
+    _MISSING_TEXT = "% missing-text"
+    _MISSING_KEY_VALUE = "% missing-key-value-item"
+    _MISSING_FORM = "% missing-form-item"
+    _ANNOTATION_DELIM = "\n"
 
     params: LaTeXParams
 
@@ -112,62 +117,24 @@ class LaTeXSerializer(DocSerializer):
     def post_process(self, text, escape_html=True, escape_underscores=True, formatting=None, hyperlink=None):
         """LaTeX escaping, then formatting/hyperlink wraps."""
         res = escape_latex(text) if self.params.escape_latex else text
-        p = self.params
-        if p.include_formatting and formatting:
-            if formatting.get("bold"):
-                res = self._fmt_bold(res)
-            if formatting.get("italic"):
-                res = self._fmt_italic(res)
-            if formatting.get("underline"):
-                res = self._fmt_underline(res)
-            if formatting.get("strikethrough"):
-                res = self._fmt_strikethrough(res)
-            script = formatting.get("script")
-            if script == "sub":
-                res = self._fmt_subscript(res)
-            elif script == "super":
-                res = self._fmt_superscript(res)
-        if p.include_hyperlinks and hyperlink:
-            res = self._fmt_hyperlink(res, hyperlink)
-        return res
+        return super().post_process(
+            res, escape_html=False, escape_underscores=False, formatting=formatting, hyperlink=hyperlink
+        )
 
     # -- annotations --------------------------------------------------------------
 
-    def serialize_annotations(self, item: dict) -> SerResult:
-        if not self.params.include_annotations:
-            return _res()
-        parts = []
-        for ann in item.get("annotations", ()):
-            kind = ann.get("kind")
-            ann_text = None
-            if kind == "classification":
-                classes = ann.get("predicted_classes") or []
-                if classes:
-                    ann_text = str(classes[0].get("class_name", "")).replace("_", " ")
-            elif kind == "description":
-                ann_text = ann.get("text")
-            elif kind == "molecule_data":
-                ann_text = ann.get("smi")
-            if ann_text:
-                lines = ann_text.splitlines() or [ann_text]
-                if len(lines) <= 1:
-                    parts.append(f"% annotation[{kind}]: {ann_text}")
-                else:
-                    parts.append(
-                        "\n".join([f"% annotation[{kind}]: {lines[0]}"] + [f"% {ln}" for ln in lines[1:]])
-                    )
-        return _res("\n".join(t for t in parts if t), item)
+    def _fmt_annotation(self, kind: str, text: str) -> str:
+        lines = text.splitlines() or [text]
+        if len(lines) <= 1:
+            return f"% annotation[{kind}]: {text}"
+        return "\n".join([f"% annotation[{kind}]: {lines[0]}"] + [f"% {ln}" for ln in lines[1:]])
 
     # -- text ----------------------------------------------------------------------
 
     def _serialize_text_item(self, item: dict, visited: set, is_inline_scope: bool) -> SerResult:
         label = item.get("label")
-        children = item.get("children") or []
-        child_group = self.doc.resolve(children[0]["$ref"]) if len(children) == 1 else None
-        has_inline_repr = (
-            item.get("text", "") == "" and child_group is not None and M.is_inline_group(child_group)
-        )
-        if has_inline_repr:
+        child_group = self._inline_child(item)
+        if child_group is not None:
             # the reference passthrough serializes the inline group WITHOUT
             # threading `visited` (latex.py:152), so the group is serialized
             # again by the enclosing traversal — construct_doc.gt.tex encodes
@@ -297,43 +264,15 @@ class LaTeXSerializer(DocSerializer):
         parts = self.get_parts(
             item=item, list_level=list_level + 1, is_inline_scope=is_inline_scope, visited=visited
         )
-        children = item.get("children") or []
-        first = self.doc.resolve(children[0]["$ref"]) if children else None
-        enumerated = bool(first and first.get("label") == M.LIST_ITEM and first.get("enumerated"))
-        env = "enumerate" if enumerated else "itemize"
+        env = "enumerate" if self._is_enumerated(item) else "itemize"
         indent = " " * (list_level * p.indent)
         content = "\n".join(x.text for x in parts if x.text)
         text = f"{indent}\\begin{{{env}}}\n{content}\n{indent}\\end{{{env}}}" if content else ""
         return _res(text, parts)
 
-    def _serialize_inline_group(self, item: dict, visited: set, list_level: int) -> SerResult:
-        parts = self.get_parts(item=item, list_level=list_level, is_inline_scope=True, visited=visited)
-        return _res(" ".join(x.text for x in parts if x.text), parts)
-
-    def _serialize_fallback(self, item: dict, visited: set) -> SerResult:
-        if M.is_group(item):
-            parts = self.get_parts(item=item, visited=visited)
-            return _res("\n\n".join(x.text for x in parts if x.text), parts)
-        return _res("% missing-text", item if M.is_doc_item(item) else None)
-
-    def serialize(self, item=None, list_level=0, is_inline_scope=False, visited=None,
-                  _nested_in_table=False) -> SerResult:
-        my_item = item if item is not None else self.doc.body
-        arr = M.ref_array(my_item["self_ref"]) if item is not None else None
-        if arr == "key_value_items":
-            (visited or set()).add(my_item["self_ref"])
-            if my_item["self_ref"] not in self.get_excluded_refs():
-                return _res("% missing-key-value-item", my_item)
-            return _res()
-        if arr == "form_items":
-            (visited or set()).add(my_item["self_ref"])
-            if my_item["self_ref"] not in self.get_excluded_refs():
-                return _res("% missing-form-item", my_item)
-            return _res()
-        return super().serialize(
-            item=item, list_level=list_level, is_inline_scope=is_inline_scope,
-            visited=visited, _nested_in_table=_nested_in_table,
-        )
+    def _serialize_unrendered(self, item: dict, placeholder: str) -> SerResult:
+        # no meta in LaTeX, and the placeholder stays in a meta-only export
+        return _res() if item["self_ref"] in self.get_excluded_refs() else _res(placeholder, item)
 
     # -- document scaffold ------------------------------------------------------------------
 
@@ -341,9 +280,7 @@ class LaTeXSerializer(DocSerializer):
         p = self.params
         body_text = "\n\n".join(x.text for x in parts if x.text)
         if p.page_break_command is not None:
-            body_text = re.sub(
-                r"#_#_DOCLING_DOC_PAGE_BREAK_(\d+)_(\d+)_#_#", p.page_break_command, body_text
-            )
+            body_text = _PB_RE.sub(p.page_break_command, body_text)
         title_cmd, body_text, needs_maketitle = self._post_process_title(body_text)
         preamble: list[str] = []
         if p.document_class:

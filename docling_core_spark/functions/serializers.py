@@ -6,9 +6,20 @@ docling-core — over the plain-dict document model in
 :mod:`docling_core_spark.model.doc`.  Target: byte-identical output vs the
 reference GT fixtures (/root/reference/test/data/doc/*.gt.md, *.gt.txt).
 
-Architecture differs deliberately: a single dispatch engine with a style
-table instead of a dozen pydantic serializer classes; this runs per-row
-inside Arrow-batch pandas UDFs.
+Architecture differs deliberately: :class:`DocSerializer` is the one
+dispatch engine (``serialize`` / ``get_parts``) for every format; this runs
+per-row inside Arrow-batch pandas UDFs.  A format subclass overrides only:
+
+- renderer hooks ``_serialize_<kind>`` (text item, table, picture, list and
+  inline group, fallback, page break, key-value, form), the inline marks
+  ``_fmt_*`` / ``post_process``, the caption, annotation and meta-field
+  renderers, and the document wrapper ``serialize_doc``;
+- per-format literals: ``_SERIALIZE_DELIM``, ``_FALLBACK_DELIM``,
+  ``_ANNOTATION_DELIM`` and the ``_MISSING_*`` placeholders.
+
+The key-value and form hooks run before meta handling and own the item's
+whole output; the base ones add the item's meta like any other item.
+Helpers shared by several formats are defined here once.
 """
 
 from __future__ import annotations
@@ -18,6 +29,7 @@ import json
 import re
 import sys
 import textwrap
+import unicodedata
 from dataclasses import dataclass, field, replace
 from typing import Any, Iterator, Optional
 
@@ -32,6 +44,42 @@ _UNDERSCORE_RE = re.compile(r"(?<!\\)_")
 _ALNUM_RE = re.compile(r"[a-zA-Z0-9]")
 _VALID_ENUM_MARKER_RE = re.compile(r"\d+\.")
 _SEPARATOR_ROW_RE = re.compile(r"^\|(\s*:?-+:?\s*\|)+\s*$")
+
+
+def replace_page_breaks(text: str, marker: str) -> str:
+    """Substitute every page-break placeholder by ``marker``, literally."""
+    return _PB_RE.sub(lambda _m: marker, text)
+
+
+def get_text_direction(text: str) -> str:
+    """LTR/RTL heuristic (reference types/doc/utils.py:226-234)."""
+    if not text:
+        return "ltr"
+    if text.isascii():
+        # no ASCII codepoint has bidirectional class R/AL — exact fast path
+        # for the dominant web-text case (one C call vs one per character)
+        return "ltr"
+    rtl = {"R", "AL"}
+    bidi = unicodedata.bidirectional
+    # list-comp (one C-level pass) instead of a genexpr: generator frame
+    # resumptions were a visible share of the mixed-script profile
+    n_rtl = sum([bidi(c) in rtl for c in text])
+    return "rtl" if bidi(text[0]) in rtl or n_rtl > len(text) / 2 else "ltr"
+
+
+def best_prediction(preds: list) -> Optional[dict]:
+    """Highest-confidence prediction (first on ties, ``None`` confidences
+    skipped); the first prediction when none has a confidence."""
+    best, best_conf = None, None
+    for pr in preds:
+        c = pr.get("confidence")
+        if c is not None and (best_conf is None or c > best_conf):
+            best, best_conf = pr, c
+    return best if best is not None else (preds[0] if preds else None)
+
+
+def _wrap(text: str, tag: str) -> str:
+    return f"<{tag}>{text}</{tag}>"
 
 # meta field declaration order per item family (reference common/meta.py:180-258,
 # items/picture/meta.py:51-58); custom keys follow in insertion order.
@@ -136,6 +184,11 @@ class DocSerializer:
     """Dispatch engine serializing a Doc to markdown / plain text / chunk text."""
 
     _SERIALIZE_DELIM = "\n\n"
+    _FALLBACK_DELIM = "\n\n"
+    _MISSING_TEXT = "<!-- missing-text -->"
+    _MISSING_KEY_VALUE = "<!-- missing-key-value-item -->"
+    _MISSING_FORM = "<!-- missing-form-item -->"
+    _ANNOTATION_DELIM = "\n\n"
 
     def __init__(self, doc: Doc, params: Optional[MarkdownParams] = None):
         self.doc = doc
@@ -396,24 +449,29 @@ class DocSerializer:
 
     def serialize_annotations(self, item: dict) -> SerResult:
         """Legacy annotations (only when item has no meta)."""
-        p = self.params
-        parts = []
-        for ann in item.get("annotations", ()):
-            kind = ann.get("kind")
-            ann_text = None
-            if kind == "classification":
-                classes = ann.get("predicted_classes") or []
-                if classes:
-                    ann_text = str(classes[0].get("class_name", "")).replace("_", " ")
-            elif kind == "description":
-                ann_text = ann.get("text")
-            elif kind == "molecule_data":
-                ann_text = ann.get("smi")
-            if ann_text:
-                if p.mark_annotations:
-                    ann_text = f'<!--<annotation kind="{kind}">-->{ann_text}<!--<annotation/>-->'
-                parts.append(_res(ann_text, item))
-        return _res("\n\n".join(r.text for r in parts if r.text), item)
+        texts = [
+            self._fmt_annotation(ann.get("kind"), t)
+            for ann in item.get("annotations", ())
+            if (t := self._annotation_text(ann))
+        ]
+        return _res(self._ANNOTATION_DELIM.join(texts), item)
+
+    @staticmethod
+    def _annotation_text(ann: dict) -> Optional[str]:
+        kind = ann.get("kind")
+        if kind == "classification":
+            classes = ann.get("predicted_classes") or []
+            return str(classes[0].get("class_name", "")).replace("_", " ") if classes else None
+        if kind == "description":
+            return ann.get("text")
+        if kind == "molecule_data":
+            return ann.get("smi")
+        return None
+
+    def _fmt_annotation(self, kind: str, text: str) -> str:
+        if self.params.mark_annotations:
+            return f'<!--<annotation kind="{kind}">-->{text}<!--<annotation/>-->'
+        return text
 
     def _use_legacy_annotations(self, item: dict, kind: Optional[str] = None) -> bool:
         if item.get("meta"):
@@ -430,57 +488,52 @@ class DocSerializer:
         tmp = text.replace("__", "_").replace("_", " ")
         return tmp.title() if title else tmp.capitalize()
 
-    def _serialize_meta_field(self, meta: dict, name: str) -> Optional[str]:
+    def _meta_field_text(self, meta: dict, name: str) -> Optional[str]:
+        """Plain text of one meta field, or None."""
         val = meta.get(name)
         if val is None:
             return None
-        txt: Optional[str] = None
-        if name == "summary":
-            txt = val.get("text")
-        elif name in ("keywords", "topics"):
-            txt = ", ".join(val.get("values", []))
-        elif name == "description":
-            txt = val.get("text")
-        elif name == "classification":
-            preds = val.get("predictions") or []
-            best, best_conf = None, None
-            for pr in preds:
-                c = pr.get("confidence")
-                if c is not None and (best_conf is None or c > best_conf):
-                    best, best_conf = pr, c
-            main = best if best is not None else (preds[0] if preds else None)
-            if main:
-                txt = self._humanize(main.get("class_name", ""))
-        elif name == "molecule":
-            txt = val.get("smi")
-        elif name == "tabular_chart":
+        if name == "summary" or name == "description":
+            return val.get("text")
+        if name in ("keywords", "topics"):
+            return ", ".join(val.get("values", []))
+        if name == "classification":
+            main = best_prediction(val.get("predictions") or [])
+            return self._humanize(main.get("class_name", "")) if main else None
+        if name == "molecule":
+            return val.get("smi")
+        if name == "tabular_chart":
             data = val.get("chart_data")
-            if data:
-                txt = self._table_github_text(data).strip() or None
-        else:
-            txt = str(val or "") or None
+            return (self._table_github_text(data).strip() or None) if data else None
+        return str(val or "") or None
+
+    def _serialize_meta_field(self, meta: dict, name: str) -> Optional[str]:
+        txt = self._meta_field_text(meta, name)
         if not txt:
             return None
         return f"[{self._humanize(name, title=True)}] {txt}" if self.params.mark_meta else txt
 
+    def _join_meta_fields(self, fields: list[str]) -> str:
+        return "\n\n".join(fields)
+
+    def _meta_name_allowed(self, name: str) -> bool:
+        p = self.params
+        return (p.allowed_meta_names is None or name in p.allowed_meta_names) and (
+            name not in p.blocked_meta_names
+        )
+
     def serialize_meta(self, item: dict) -> SerResult:
         """Meta fields in declaration order, then custom keys."""
         meta = item.get("meta")
+        source = item if M.is_doc_item(item) else None
         if not meta or item["self_ref"] in self.get_excluded_refs():
-            return _res("", item if M.is_doc_item(item) else None)
-        p = self.params
+            return _res("", source)
         keys = [k for k in _META_FIELD_ORDER if k in meta]
         keys += [k for k in meta if k not in _META_FIELD_ORDER]
-        parts = []
-        for k in keys:
-            if p.allowed_meta_names is not None and k not in p.allowed_meta_names:
-                continue
-            if k in p.blocked_meta_names:
-                continue
-            t = self._serialize_meta_field(meta, k)
-            if t:
-                parts.append(t)
-        return _res("\n\n".join(parts), item if M.is_doc_item(item) else None)
+        fields = [
+            t for k in keys if self._meta_name_allowed(k) and (t := self._serialize_meta_field(meta, k))
+        ]
+        return _res(self._join_meta_fields(fields), source)
 
     # -- tables ------------------------------------------------------------
 
@@ -699,11 +752,8 @@ class DocSerializer:
         escape_html = True
         escape_underscores = True
 
-        children = item.get("children") or []
-        child_group = self.doc.resolve(children[0]["$ref"]) if len(children) == 1 else None
-        has_inline_repr = (
-            item.get("text", "") == "" and child_group is not None and M.is_inline_group(child_group)
-        )
+        child_group = self._inline_child(item)
+        has_inline_repr = child_group is not None
         if has_inline_repr:
             text = self.serialize(item=child_group, visited=visited).text
             processing_pending = False
@@ -783,6 +833,20 @@ class DocSerializer:
             )
         return _res(out_text, res_parts)
 
+    def _inline_child(self, item: dict) -> Optional[dict]:
+        """The inline group an empty-text item renders through, or None."""
+        children = item.get("children") or []
+        if item.get("text", "") != "" or len(children) != 1:
+            return None
+        child = self.doc.resolve(children[0]["$ref"])
+        return child if M.is_inline_group(child) else None
+
+    def _is_enumerated(self, group: dict) -> bool:
+        """A list group is ordered when its first child is an enumerated item."""
+        children = group.get("children") or []
+        first = self.doc.resolve(children[0]["$ref"]) if children else None
+        return bool(first and first.get("label") == M.LIST_ITEM and first.get("enumerated"))
+
     def _list_item_text(self, item: dict, text: str) -> str:
         """List-item marker logic (markdown.py:237-277)."""
         p = self.params
@@ -798,12 +862,9 @@ class DocSerializer:
             md_marker = "-"
             parent = self.doc.parent_of(item)
             if parent is not None and M.is_list_group(parent):
-                children = parent.get("children") or []
-                first = self.doc.resolve(children[0]["$ref"]) if children else None
-                first_enum = bool(first and first.get("label") == M.LIST_ITEM and first.get("enumerated"))
-                if first_enum and (p.orig_list_item_marker_mode != "auto" or not marker):
+                if self._is_enumerated(parent) and (p.orig_list_item_marker_mode != "auto" or not marker):
                     pos = -1
-                    for i, ch in enumerate(children):
+                    for i, ch in enumerate(parent["children"]):
                         if self.doc.resolve(ch["$ref"]) is item:
                             pos = i
                             break
@@ -888,8 +949,47 @@ class DocSerializer:
     def _serialize_fallback(self, item: dict, visited: set) -> SerResult:
         if M.is_group(item):
             parts = self.get_parts(item=item, visited=visited)
-            return _res("\n\n".join(p.text for p in parts if p.text), parts)
-        return _res("<!-- missing-text -->", item if M.is_doc_item(item) else None)
+            return _res(self._FALLBACK_DELIM.join(p.text for p in parts if p.text), parts)
+        return _res(self._MISSING_TEXT, item if M.is_doc_item(item) else None)
+
+    # -- key-value / form items and page breaks ---------------------------------
+
+    def _serialize_key_value(self, item: dict) -> SerResult:
+        """A key-value item, meta included (dispatched before meta handling)."""
+        return self._serialize_unrendered(item, self._MISSING_KEY_VALUE)
+
+    def _serialize_form(self, item: dict) -> SerResult:
+        """A form item, meta included (dispatched before meta handling)."""
+        return self._serialize_unrendered(item, self._MISSING_FORM)
+
+    def _serialize_unrendered(self, item: dict, placeholder: str) -> SerResult:
+        """Placeholder for an item the format cannot render, with the item's
+        meta as for any other item."""
+        meta_part = self._meta_part(item) if item.get("meta") else None
+        if not self.params.include_non_meta:
+            return meta_part if meta_part is not None else _res()
+        part = _res() if item["self_ref"] in self.get_excluded_refs() else _res(placeholder, item)
+        return part if meta_part is None else self._with_meta(part, meta_part)
+
+    def _serialize_page_break(self, item: dict) -> SerResult:
+        prev_p, next_p = item["_pb"]
+        return SerResult(_PB_FMT.format(prev_p, next_p), [], pb_node=item)
+
+    # -- meta beside the item ---------------------------------------------------
+
+    def _meta_part(self, item: dict) -> Optional[SerResult]:
+        """The item's meta as a part of its own, or None when it is empty or
+        rendered inside the item."""
+        if self._item_wraps_meta(item):
+            return None
+        cand = self.serialize_meta(item)
+        return cand if cand.text else None
+
+    def _with_meta(self, part: SerResult, meta_part: SerResult) -> SerResult:
+        parts = [part, meta_part]
+        out = _res(self._SERIALIZE_DELIM.join(p.text for p in parts if p.text), parts)
+        out.pb_node = part.pb_node
+        return out
 
     # -- main dispatch ----------------------------------------------------
 
@@ -927,23 +1027,23 @@ class DocSerializer:
         sr = my_item["self_ref"]
         my_visited.add(sr)
 
-        meta_part: Optional[SerResult] = None
-        if my_item.get("meta") and not self._item_wraps_meta(my_item):
-            cand = self.serialize_meta(my_item)
-            if cand.text:
-                meta_part = cand
+        # single ref_array switch: the node's array determines its kind, so
+        # one parse replaces the is_list_group/is_inline_group/is_text_item/
+        # ... predicate chain (each of which re-derived ref_array) — this is
+        # the hottest dispatch in the row path, shared by all serializers
+        arr = M.ref_array(sr)
+        if arr == "key_value_items":
+            return self._serialize_key_value(my_item)
+        if arr == "form_items":
+            return self._serialize_form(my_item)
 
+        meta_part = self._meta_part(my_item) if my_item.get("meta") else None
         if not self.params.include_non_meta:
             # meta-only export (reference common.py:403-404): item bodies are
             # suppressed; descendants stay unvisited so the outer traversal
             # still surfaces their meta
             return meta_part if meta_part is not None else _res()
 
-        # single ref_array switch: the node's array determines its kind, so
-        # one parse replaces the is_list_group/is_inline_group/is_text_item/
-        # ... predicate chain (each of which re-derived ref_array) — this is
-        # the hottest dispatch in the row path, shared by all serializers
-        arr = M.ref_array(sr)
         if arr == "texts":
             caps = self._captions_of
             if caps is None:
@@ -970,32 +1070,13 @@ class DocSerializer:
         elif arr == "pictures":
             part = self._serialize_picture(my_item, my_visited)
         elif "_pb" in my_item:
-            prev_p, next_p = my_item["_pb"]
-            part = SerResult(_PB_FMT.format(prev_p, next_p), [], pb_node=my_item)
-        elif arr == "key_value_items":
-            if sr not in self.get_excluded_refs():
-                part = _res("<!-- missing-key-value-item -->", my_item)
-            else:
-                part = _res()
-        elif arr == "form_items":
-            if sr not in self.get_excluded_refs():
-                part = _res("<!-- missing-form-item -->", my_item)
-            else:
-                part = _res()
+            part = self._serialize_page_break(my_item)
         else:
             part = self._serialize_fallback(my_item, my_visited)
 
-        if meta_part is None:
-            # single-part fast path: `part` already carries deduped spans and
-            # its own pb_node — re-wrapping through _res would only copy them
-            return part
-
-        parts = [part, meta_part]
-        out = _res(
-            self._SERIALIZE_DELIM.join(p.text for p in parts if p.text), parts
-        )
-        out.pb_node = part.pb_node
-        return out
+        # single-part fast path: `part` already carries deduped spans and its
+        # own pb_node — re-wrapping through _res would only copy them
+        return part if meta_part is None else self._with_meta(part, meta_part)
 
     def get_parts(
         self,
@@ -1033,8 +1114,7 @@ class DocSerializer:
         """Join parts and substitute page-break placeholders."""
         text = "\n\n".join(p.text for p in parts if p.text)
         if self.params.page_break_placeholder is not None:
-            page_sep = self.params.page_break_placeholder
-            text = _PB_RE.sub(lambda m: page_sep, text)
+            text = replace_page_breaks(text, self.params.page_break_placeholder)
         return _res(text, parts)
 
 
