@@ -15,8 +15,8 @@ from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
     SerResult,
-    _PB_RE,
     _res,
+    replace_page_breaks,
 )
 from docling_core_spark.model import doc as M
 from docling_core_spark.model.doc import Doc
@@ -280,7 +280,7 @@ class LaTeXSerializer(DocSerializer):
         p = self.params
         body_text = "\n\n".join(x.text for x in parts if x.text)
         if p.page_break_command is not None:
-            body_text = _PB_RE.sub(p.page_break_command, body_text)
+            body_text = replace_page_breaks(body_text, p.page_break_command)
         title_cmd, body_text, needs_maketitle = self._post_process_title(body_text)
         preamble: list[str] = []
         if p.document_class:

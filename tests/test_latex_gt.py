@@ -31,6 +31,19 @@ def test_latex_title_relocation():
     assert "\\title" not in body
 
 
+@pytest.mark.parametrize("command", ["\\newpage", "\\clearpage", "% break \\1 \\g<0>"])
+def test_latex_page_break_command_is_literal(command):
+    """The page-break command is inserted verbatim, not as a regex template."""
+    doc = Doc(name="two pages")
+    doc.add_page(1, 100.0, 100.0)
+    doc.add_page(2, 100.0, 100.0)
+    bbox = {"l": 1.0, "t": 1.0, "r": 9.0, "b": 9.0, "coord_origin": "TOPLEFT"}
+    doc.add_text("text", "first page", prov=[{"page_no": 1, "bbox": bbox, "charspan": [0, 10]}])
+    doc.add_text("text", "second page", prov=[{"page_no": 2, "bbox": bbox, "charspan": [0, 11]}])
+    out = export_to_latex(doc, page_break_command=command)
+    assert f"first page\n\n{command}\n\nsecond page" in out
+
+
 def test_latex_section_level_guard():
     doc = Doc(name="t")
     doc.add_heading("Deep", level=5)
