@@ -670,8 +670,8 @@ def simhash_duplicates_sql(
     """DuckDB oracle SQL for simhash_duplicates (same hash, banding, and cap)."""
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
-    # the cap gate in `bands` spells hash60_sql out by hand: its line breaks
-    # are part of the pinned oracle text (tests/test_oracle_sql_text.py)
+    # key of the deterministic md5-60 gate of cap_hot_buckets
+    gate_key = " || ':' || ".join(f"CAST(a.{c} AS VARCHAR)" for c in ("doc_id", "band", "bval"))
     return f"""
 WITH toks AS (
   SELECT DISTINCT doc_id,
@@ -708,9 +708,7 @@ bands AS (
   FROM bands_all a LEFT JOIN bucket_counts c
     ON a.band = c.band AND a.bval = c.bval
   WHERE c.cnt IS NULL
-     OR (('0x' || substr(md5(CAST(a.doc_id AS VARCHAR) || ':' ||
-            CAST(a.band AS VARCHAR) || ':' || CAST(a.bval AS VARCHAR)), 1, 15)
-         )::BIGINT % c.cnt) < {max_bucket_size}
+     OR ({hash60_sql(gate_key)} % c.cnt) < {max_bucket_size}
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming

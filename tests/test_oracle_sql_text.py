@@ -47,7 +47,7 @@ DIGESTS = {
     "dedup_exact_substring": "bce62a1b02ee0cfd2248c2e51458eeb2fb98ce087b7b1866d55e52da667a52e3",
     "dedup_minhash_lsh": "a4f68c21a20077e4ded2f7819b826cb36014437519e35d6c1b821871cc606549",
     "dedup_ngram_jaccard": "29bd7e2be2c9d62db211e942268841bd75c8a156ddb9cb5453c44b605f51db43",
-    "dedup_simhash": "e6f2c9bcfaf4f1c7540fe02652db5fb1407fce3d3a99439296c01b231edf04ab",
+    "dedup_simhash": "c62a956cead148afc1641edc73df6c5a1d0851eca623ad9caadfeea206ba30b0",
     "doc_concatenate_by_lang": "187134ed84a46a38b6bb498079b1cceaaf70052c27a789fc5b995ccaa6bbe9ad",
     "doc_page_chunks": "fcde534e3a066e7fd2d52928be3ce555dc4a72cc88b0665f5d059993e603a594",
     "doc_profile_reference": "979b625b66bac2ac649a07f9e9d43e7ca0c400f1dce58dc1ac28689e244dc43e",
