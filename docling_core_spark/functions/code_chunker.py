@@ -35,22 +35,22 @@ test/data/chunker_repo/Python/repo_out_chunks.json encodes them):
 from __future__ import annotations
 
 import ast
-import hashlib
 import io
 import keyword
 import tokenize
 from bisect import bisect_right
 from typing import Any, Iterator, Optional  # noqa: F401
 
-_SCHEMA_NAME = "docling_core.transforms.chunker.CodeDocMeta"
-_VERSION = "1.0.0"
-_COPYRIGHT_WORDS = ("copyright", "license", "licensed under", "all rights reserved")
+from docling_core_spark.functions.code_tree import (
+    _COPYRIGHT_WORDS,
+    _SCHEMA_NAME,
+    _VERSION,
+    _sha,
+    _split_large_chunk,
+    find_gaps,
+)
 
 _FUNC_TYPES = (ast.FunctionDef, ast.AsyncFunctionDef)
-
-
-def _sha(content: str) -> int:
-    return int(hashlib.sha1(content.encode("utf-8")).hexdigest(), 16)
 
 
 class _Source:
@@ -141,30 +141,6 @@ class _Source:
         reference golden end_line_signature values), so they neither shift
         the block start nor become siblings of the first statement."""
         return self.ext_start(body[0])
-
-
-def _merge_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    if not ranges:
-        return []
-    merged: list[tuple[int, int]] = []
-    for start, end in sorted(ranges):
-        if not merged or start > merged[-1][1]:
-            merged.append((start, end))
-        else:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], end))
-    return merged
-
-
-def _find_gaps(ranges: list[tuple[int, int]], total: int) -> list[tuple[int, int]]:
-    gaps = []
-    last_end = 0
-    for start, end in _merge_ranges(ranges):
-        if last_end < start:
-            gaps.append((last_end, start))
-        last_end = end
-    if last_end < total:
-        gaps.append((last_end, total))
-    return gaps
 
 
 class _PyChunker:
@@ -574,7 +550,7 @@ def chunk_python_code(
 
     # -- preamble (orphan ranges) ----------------------------------------------
     # QUIRK: the reference slices the unicode string with byte offsets
-    gaps = _find_gaps(used_ranges, len(code))
+    gaps = find_gaps(used_ranges, len(code))
     orphan_pieces = []
     for start, end in gaps:
         text = code[start:end].strip()
@@ -612,83 +588,3 @@ def chunk_python_code(
             yield chunk
         else:
             yield from _split_large_chunk(chunk, tokenizer, max_tokens, min_chunk_size)
-
-
-def _split_large_chunk(
-    chunk: dict,
-    tokenizer,
-    max_tokens: int,
-    min_chunk_size: int,
-    prefix: str = "\n\t",
-    suffix: str = "",
-) -> Iterator[dict]:
-    """Oversize fallback (reference _ChunkSizeProcessor; Python prefix '\\n\\t'
-    with empty suffix, brace languages ' {' with '\\n}')."""
-    if chunk["meta"]["chunk_type"] in ("function", "method"):
-        lines = chunk["text"].split("\n")
-        signature_line = ""
-        body_start = 0
-        for i, line in enumerate(lines):
-            if line.strip():
-                signature_line = line
-                body_start = i + 1
-                break
-        body_lines = lines[body_start:]
-        if not signature_line or not body_lines:
-            yield chunk
-            return
-        if body_lines and body_lines[-1].strip() == "}":
-            body_lines = body_lines[:-1]
-        pieces = []
-        current = [f"{signature_line}{prefix}"]
-        size = 0
-        for line in body_lines:
-            line_tokens = tokenizer.count_tokens(line)
-            if size + line_tokens > max_tokens and len(current) > 1:
-                pieces.append("".join(current) + suffix)
-                current = [f"{signature_line}{prefix}"]
-                size = 0
-            current.append(line)
-            size += line_tokens
-        if current:
-            pieces.append("".join(current) + suffix)
-        if len(pieces) > 1:
-            last = pieces.pop()
-            if tokenizer.count_tokens(last) < min_chunk_size:
-                # QUIRK: the reference rstrip/lstrips with *char sets*
-                stripped = pieces[-1].rstrip(suffix) if suffix else pieces[-1]
-                pieces[-1] = stripped + "\n" + last.lstrip(signature_line + prefix)
-            else:
-                pieces.append(last)
-        for i, text in enumerate(pieces):
-            if not text.strip():
-                continue
-            new_meta = dict(chunk["meta"])
-            if len(pieces) > 1:
-                new_meta["part_name"] = f"{chunk['meta']['part_name']}_part_{i + 1}"
-            yield {"text": text, "meta": new_meta}
-    else:
-        lines = chunk["text"].split("\n")
-        current: list[str] = []
-        size = 0
-        number = 1
-        for line in lines:
-            line_tokens = tokenizer.count_tokens(line)
-            if size + line_tokens > max_tokens and current:
-                text = "\n".join(current)
-                if tokenizer.count_tokens(text) >= min_chunk_size:
-                    new_meta = dict(chunk["meta"])
-                    new_meta["part_name"] = f"{chunk['meta'].get('part_name')}_part_{number}"
-                    yield {"text": text, "meta": new_meta}
-                    number += 1
-                current = [line]
-                size = line_tokens
-            else:
-                current.append(line)
-                size += line_tokens
-        if current:
-            text = "\n".join(current)
-            if tokenizer.count_tokens(text) >= min_chunk_size:
-                new_meta = dict(chunk["meta"])
-                new_meta["part_name"] = f"{chunk['meta'].get('part_name')}_part_{number}"
-                yield {"text": text, "meta": new_meta}

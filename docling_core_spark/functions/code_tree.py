@@ -373,6 +373,86 @@ def find_gaps(ranges: list[tuple[int, int]], total: int) -> list[tuple[int, int]
     return gaps
 
 
+def _split_large_chunk(
+    chunk: dict,
+    tokenizer,
+    max_tokens: int,
+    min_chunk_size: int,
+    prefix: str = "\n\t",
+    suffix: str = "",
+) -> Iterator[dict]:
+    """Oversize fallback (reference _ChunkSizeProcessor; Python prefix '\\n\\t'
+    with empty suffix, brace languages ' {' with '\\n}')."""
+    if chunk["meta"]["chunk_type"] in ("function", "method"):
+        lines = chunk["text"].split("\n")
+        signature_line = ""
+        body_start = 0
+        for i, line in enumerate(lines):
+            if line.strip():
+                signature_line = line
+                body_start = i + 1
+                break
+        body_lines = lines[body_start:]
+        if not signature_line or not body_lines:
+            yield chunk
+            return
+        if body_lines and body_lines[-1].strip() == "}":
+            body_lines = body_lines[:-1]
+        pieces = []
+        current = [f"{signature_line}{prefix}"]
+        size = 0
+        for line in body_lines:
+            line_tokens = tokenizer.count_tokens(line)
+            if size + line_tokens > max_tokens and len(current) > 1:
+                pieces.append("".join(current) + suffix)
+                current = [f"{signature_line}{prefix}"]
+                size = 0
+            current.append(line)
+            size += line_tokens
+        if current:
+            pieces.append("".join(current) + suffix)
+        if len(pieces) > 1:
+            last = pieces.pop()
+            if tokenizer.count_tokens(last) < min_chunk_size:
+                # QUIRK: the reference rstrip/lstrips with *char sets*
+                stripped = pieces[-1].rstrip(suffix) if suffix else pieces[-1]
+                pieces[-1] = stripped + "\n" + last.lstrip(signature_line + prefix)
+            else:
+                pieces.append(last)
+        for i, text in enumerate(pieces):
+            if not text.strip():
+                continue
+            new_meta = dict(chunk["meta"])
+            if len(pieces) > 1:
+                new_meta["part_name"] = f"{chunk['meta']['part_name']}_part_{i + 1}"
+            yield {"text": text, "meta": new_meta}
+    else:
+        lines = chunk["text"].split("\n")
+        current: list[str] = []
+        size = 0
+        number = 1
+        for line in lines:
+            line_tokens = tokenizer.count_tokens(line)
+            if size + line_tokens > max_tokens and current:
+                text = "\n".join(current)
+                if tokenizer.count_tokens(text) >= min_chunk_size:
+                    new_meta = dict(chunk["meta"])
+                    new_meta["part_name"] = f"{chunk['meta'].get('part_name')}_part_{number}"
+                    yield {"text": text, "meta": new_meta}
+                    number += 1
+                current = [line]
+                size = line_tokens
+            else:
+                current.append(line)
+                size += line_tokens
+        if current:
+            text = "\n".join(current)
+            if tokenizer.count_tokens(text) >= min_chunk_size:
+                new_meta = dict(chunk["meta"])
+                new_meta["part_name"] = f"{chunk['meta'].get('part_name')}_part_{number}"
+                yield {"text": text, "meta": new_meta}
+
+
 # ---------------------------------------------------------------------------
 # Generic chunker (reference _CodeChunker semantics over Node)
 # ---------------------------------------------------------------------------
@@ -844,8 +924,6 @@ class TreeChunker:
             from docling_core_spark.functions.chunkers import RegexTokenizer
 
             tokenizer = RegexTokenizer(max_tokens)
-        from docling_core_spark.functions.code_chunker import _split_large_chunk
-
         for chunk in all_chunks:
             if tokenizer.count_tokens(chunk["text"]) <= max_tokens:
                 yield chunk
