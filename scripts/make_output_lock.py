@@ -342,7 +342,36 @@ def _sheet_doc():
     return d
 
 
-CORPUS = {"kitchen": _kitchen_doc, "meta_only": _meta_only_doc, "sheet": _sheet_doc}
+def _threaded_doc():
+    """A page break consumed by a threaded item, then met again inside a
+    rich table cell (doclang drops a suppressed break once)."""
+    from docling_core_spark.model import doc as M
+    from docling_core_spark.model.doc import Doc
+
+    d = Doc(name="threaded")
+    d.add_page(1, 100.0, 100.0)
+    d.add_page(2, 100.0, 100.0)
+    d.add_text(M.TEXT, "page one", prov=[_prov(1, 1, 1, 99, 9, 8)])
+    d.add_text(M.TEXT, "split across pages",
+               prov=[_prov(1, 1, 90, 99, 99, 6), dict(_prov(2, 1, 1, 99, 9), charspan=[6, 18])])
+    d.add_text(M.TEXT, "page two", prov=[_prov(2, 1, 10, 99, 19, 8)])
+    grp = d.add_group(name="cell group")
+    d.add_text(M.TEXT, "group on one", parent=grp, prov=[_prov(1, 1, 20, 99, 29, 12)])
+    d.add_text(M.TEXT, "group on two", parent=grp, prov=[_prov(2, 1, 30, 99, 39, 12)])
+    form = d.add_form(_graph([("Q", "A")]), prov=[_prov(2, 1, 40, 99, 49)])
+    data = _table_data([["a", "b"], ["c", "d"]])
+    data["table_cells"][1]["ref"] = {"$ref": grp["self_ref"]}
+    data["table_cells"][3]["ref"] = {"$ref": form["self_ref"]}
+    d.add_table(data, prov=[_prov(2, 1, 50, 99, 90)])
+    return d
+
+
+CORPUS = {
+    "kitchen": _kitchen_doc,
+    "meta_only": _meta_only_doc,
+    "sheet": _sheet_doc,
+    "threaded": _threaded_doc,
+}
 
 
 def variants() -> dict[str, Callable[[Any], Any]]:
