@@ -366,11 +366,34 @@ def _threaded_doc():
     return d
 
 
+def _annotated_doc():
+    """Legacy (pre-meta) annotations on a picture and a table."""
+    from docling_core_spark.model import doc as M
+    from docling_core_spark.model.doc import Doc
+
+    d = Doc(name="annotated")
+    d.add_title("Annotated")
+    pic = d.add_picture(caption=d.add_text(M.CAPTION, "Figure: legacy_annotations"))
+    pic["annotations"] = [
+        {"kind": "classification", "provenance": "model",
+         "predicted_classes": [{"class_name": "bar_chart", "confidence": 0.9}]},
+        {"kind": "description", "provenance": "model", "text": "first line\nsecond_line"},
+        {"kind": "molecule_data", "provenance": "model", "smi": "CCO", "confidence": 1.0},
+        {"kind": "tabular_chart", "title": "t", "chart_data": _table_data([["x", "y"], ["1", "2"]])},
+        {"kind": "misc", "content": {"k": "v"}},
+    ]
+    tbl = d.add_table(_table_data([["a", "b"], ["1", "2"]]))
+    tbl["annotations"] = [{"kind": "description", "provenance": "model", "text": "table <note>"}]
+    d.add_text(M.TEXT, "after")
+    return d
+
+
 CORPUS = {
     "kitchen": _kitchen_doc,
     "meta_only": _meta_only_doc,
     "sheet": _sheet_doc,
     "threaded": _threaded_doc,
+    "annotated": _annotated_doc,
 }
 
 
