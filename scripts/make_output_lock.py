@@ -12,8 +12,10 @@ of its sha256.  The lock has three parts:
 - ``serializers``: builder-constructed documents (``CORPUS``) through
   every ``DocSerializer`` subclass in the variants of :func:`variants`.
 - ``code_chunks``: the five code chunkers over
-  ``doc_synth_ops.synth_*_module`` sources, at the default and at a small
-  token budget (oversize splitting).
+  ``doc_synth_ops.synth_*_module`` sources, and the Python chunker over the
+  named sources of ``PY_SOURCES``, each at the default and at a small token
+  budget (oversize splitting); plus ``hierarchical_chunks(code_chunking=True)``
+  over a doc with Python, Java and unknown-language code items.
 
 An output that raises is recorded as ``raises:<ExceptionType>``.
 
@@ -490,18 +492,395 @@ CODE_DOCS = (
 )
 
 
+# Named Python sources, one per behaviour of the Python chunker worth
+# pinning: the reference quirks it keeps, decorators and comments, nesting,
+# import forms, module variables, and inputs that split, vanish or raise.
+PY_SOURCES = {
+    "quirks": '''\
+# Copyright 2024 Example Corp. All rights reserved.
+# second header line
+"""Module docstring."""
+import os
+import sys as system
+
+LIMIT = 10
+
+
+class Plain:
+    """Class docstring: never stripped, never in meta."""
+
+    def method(self, path):
+        """Method docstring."""
+        return os.path.join(path, str(LIMIT))
+
+
+# first comment
+# second comment
+@decorator
+def top(value):
+    # inner comment
+    return system.argv[value]
+
+# between functions
+X = 1
+caf\u00e9 = "\u00e9t\u00e9 \u2014 \u65e5\u672c"
+''',
+    "decorated": '''\
+import functools
+from dataclasses import dataclass
+
+
+def deco(fn):
+    return fn
+
+
+@functools.lru_cache(maxsize=None)
+def cached(n):
+    return n * 2
+
+
+@dataclass
+class Point:
+    x: int = 0
+    y: int = 0
+
+
+class Service:
+    @deco
+    def __init__(self, name):
+        self.name = name
+
+    def run(self):
+        return functools.reduce(max, [1, 2])
+
+    @staticmethod
+    def helper():
+        return 1
+''',
+    "comments": '''\
+import json
+# comment above decorators
+# and a second one
+@dataclass(frozen=True)
+class Frozen:
+    a: int = 1
+
+
+class Holder:  # trailing header comment
+    # comment between the colon and the first statement
+    value = json.dumps({})
+
+    def get(self):  # signature comment
+        # body comment first
+        return self.value
+
+
+def spaced():
+
+    # leading blank line and comment
+    return json.loads("1")
+
+
+@decorator
+# comment between decorator and def mentions copyright
+def between():
+    return 2
+
+if True:
+    pass
+# comment before else
+else:
+    pass
+# license: trailing comment after the last statement
+''',
+    "decorated_only": '''\
+import abc
+
+
+class OnlyDecorated:
+    """Its methods are all decorated."""
+
+    @property
+    def size(self):
+        return abc.ABC
+
+    @classmethod
+    def make(cls):
+        return cls()
+
+
+class InitOnly:
+    limit = 3
+
+    def __init__(self, x):
+        self.x = x
+
+    @property
+    def doubled(self):
+        return self.x * 2
+
+
+class InitAndMore:
+    def __init__(self):
+        self.items = []
+
+    def add(self, item):
+        self.items.append(item)
+''',
+    "nesting": '''\
+import re
+
+
+class Outer:
+    kind = "outer"
+
+    def __init__(self):
+        self.inner = self.Inner()
+
+    class Inner:
+        tag = re.compile("x")
+
+        def describe(self):
+            return self.tag.pattern
+
+        class Deepest:
+            def leaf(self):
+                return 0
+
+
+def factory():
+    class Local:
+        def method(self):
+            return re.escape("a")
+
+    return Local
+
+
+class Empty:
+    pass
+''',
+    "compound": '''\
+import sys
+
+if sys.version_info >= (3, 8):
+    def when_new():
+        return "new"
+else:
+    def when_old():
+        return "old"
+
+try:
+    import fast_json as json_impl
+
+    def in_try():
+        return json_impl
+except ImportError:
+    def in_except():
+        return None
+else:
+    def in_else():
+        return 1
+finally:
+    def in_finally():
+        return 2
+
+with open(__file__) as fh:
+    def in_with():
+        return fh
+
+for i in range(2):
+    def in_for():
+        return i
+
+while False:
+    def in_while():
+        pass
+
+
+class Guarded:
+    if True:
+        def __init__(self):
+            self.ok = True
+
+    def other(self):
+        return self.ok
+
+match sys.argv:
+    case [_, "run"]:
+        def in_match():
+            return 1
+    case _:
+        pass
+''',
+    "imports": '''\
+from __future__ import annotations
+
+import os.path as osp
+import collections.abc
+from . import sibling
+from ..pkg import relative_name as rn
+from typing import *
+from itertools import chain, islice as take
+
+
+def uses_alias(p):
+    return osp.join(p, "x")
+
+
+def uses_dotted(x):
+    return isinstance(x, collections.abc.Mapping)
+
+
+def uses_relative():
+    return sibling, rn
+
+
+def uses_local_import():
+    import math
+    from json import dumps as d
+    return math.pi, d
+
+
+def uses_star() -> List[int]:
+    return list(take(chain([1], [2]), 1))
+''',
+    "module_vars": '''\
+import pathlib
+from decimal import Decimal
+
+BASE: pathlib.Path = pathlib.Path("/tmp")
+# comment above a variable
+RATE = Decimal("0.5")
+a = b = 3
+counter: int
+counter = 0
+
+
+def reads_base():
+    return BASE / "x"
+
+
+def reads_rate(v):
+    return v * RATE
+
+
+def shadows():
+    RATE = 2
+    return RATE
+
+
+def multi():
+    return a + b
+
+
+class User:
+    def __init__(self):
+        self.base = BASE
+
+    def go(self):
+        return counter
+
+
+class Other:
+    def __init__(self):
+        self.rate = RATE
+''',
+    "async_unicode": '''\
+# -*- coding: utf-8 -*-
+"""\u00dcbersicht: \u00e4\u00f6\u00fc \u2014 \u4e2d\u6587 \U0001f600"""
+import asyncio
+
+GREETING = "h\u00e9llo w\u00f6rld \U0001f30d"
+
+
+async def fetch(url):
+    await asyncio.sleep(0)
+    return GREETING + url
+
+
+async def gather(*urls):
+    async with asyncio.Lock():
+        async for _ in aiter(urls):
+            pass
+    return await asyncio.gather(*(fetch(u) for u in urls))
+
+
+def na\u00efve():
+    return "\u00fcml\u00e4ut"
+''',
+    "copyright": '''\
+#!/usr/bin/env python
+#
+# Copyright (c) 2020 The Authors.
+# Licensed under the Apache License, Version 2.0.
+#
+# All Rights Reserved.
+
+"""Module docstring after the header."""
+
+import logging
+
+log = logging.getLogger(__name__)
+
+
+def info(msg):
+    log.info(msg)
+''',
+    "tabs": "import os\n\n\nclass Tabbed:\n\tx = 1\n\n\tdef method(self):\n\t\tif self.x:\n"
+    "\t\t\treturn os.sep\n\t\treturn None\n\n\ndef top():\n\treturn Tabbed().method()\n",
+    "long_function": "import textwrap\n\n\ndef long_function(data):\n"
+    + "".join(f"    value_{i} = textwrap.dedent(data[{i}]) + str({i} * {i})\n" for i in range(40))
+    + "    return value_39\n\n\nclass Big:\n"
+    + "".join(f"    field_{i} = {i}\n" for i in range(30)),
+    "line_breaks": "import os\r\n\r\n\r\ndef crlf():\r\n    return os.sep\r\n\x0c\n# form feed above\n"
+    "def after_form_feed():\n    return 1\n",
+    "whitespace_only": "   \n\t\n  \n",
+    "syntax_error": "def broken(:\n    return 1\n",
+}
+
+
+def _code_chunk_doc():
+    """One doc with a Python, a Java and an unknown-language code item."""
+    from docling_core_spark.model import doc as M
+    from docling_core_spark.model.doc import Doc
+
+    d = Doc(name="code_doc")
+    d.add_heading("Code", level=1)
+    d.add_code("import os\n\n\ndef f(x):\n    return os.sep + x\n", code_language="Python")
+    d.add_text(M.TEXT, "between the listings")
+    d.add_code("class A {\n  int f() { return 1; }\n}\n", code_language="Java")
+    d.add_code("fn main() {\n    println!(\"hi\");\n}\n", code_language="Rust")
+    d.add_code("   ", code_language="Python")
+    return d
+
+
 def code_chunk_cases() -> dict[str, str]:
+    from docling_core_spark.functions.chunkers import hierarchical_chunks
+    from docling_core_spark.functions.code_chunker import chunk_python_code
     from docling_core_spark.operators.doc_synth_ops import _chunker_for
 
     out = {}
+    budgets = ((5000, 300), (24, 4))
     for lang in ("python", "java", "c", "ts", "js"):
         synth, chunker = _chunker_for(lang)
         for doc_id, text in CODE_DOCS:
             code = synth(doc_id, text)
-            for max_tokens, min_size in ((5000, 300), (24, 4)):
+            for max_tokens, min_size in budgets:
                 out[f"{lang}/{doc_id}/{max_tokens}"] = _guarded(
                     lambda: list(chunker(code, max_tokens=max_tokens, min_chunk_size=min_size))
                 )
+    for name, code in PY_SOURCES.items():
+        for max_tokens, min_size in budgets:
+            out[f"python/{name}/{max_tokens}"] = _guarded(
+                lambda: list(chunk_python_code(code, max_tokens=max_tokens, min_chunk_size=min_size))
+            )
+    for origin in (None, {"filename": "listing.md", "mimetype": "text/markdown"}):
+        def chunks() -> list:
+            doc = _code_chunk_doc()
+            doc.origin = origin
+            return list(hierarchical_chunks(doc, code_chunking=True))
+
+        out[f"hierarchical/code_chunking/{'origin' if origin else 'no_origin'}"] = _guarded(chunks)
     return out
 
 
