@@ -30,6 +30,7 @@ import re
 from dataclasses import replace
 from typing import Any, Callable, Iterator, Optional
 
+from docling_core_spark.functions.code_tree import _sha, code_chunker, code_meta
 from docling_core_spark.functions.serializers import (
     CHUNKING_OVERRIDES,
     DocSerializer,
@@ -44,36 +45,6 @@ from docling_core_spark.model.doc import Doc
 
 # GPT2-style coarse token pattern: words, numbers, punctuation runs.
 _TOKEN_RE = re.compile(r"'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-zÀ-￿]+| ?\d+| ?[^\sA-Za-z\d]+|\s+")
-
-
-def _inner_code_chunkers() -> dict:
-    """code_language -> chunker, mirroring the reference
-    standard_code_chunking_strategy.py:29-35 _INNER_CHUNKERS_BY_LANG."""
-    from docling_core_spark.functions.code_chunker import chunk_python_code
-    from docling_core_spark.functions.code_chunker_c import chunk_c_code
-    from docling_core_spark.functions.code_chunker_java import chunk_java_code
-    from docling_core_spark.functions.code_chunker_jsts import (
-        chunk_js_code,
-        chunk_ts_code,
-    )
-
-    return {
-        "Python": chunk_python_code,
-        "TypeScript": chunk_ts_code,
-        "JavaScript": chunk_js_code,
-        "C": chunk_c_code,
-        "Java": chunk_java_code,
-    }
-
-
-class _LazyChunkerMap(dict):
-    def get(self, key, default=None):
-        if not self:
-            self.update(_inner_code_chunkers())
-        return super().get(key, default)
-
-
-_INNER_CODE_CHUNKERS: dict = _LazyChunkerMap()
 
 
 class RegexTokenizer:
@@ -176,36 +147,21 @@ def hierarchical_chunks(
                 # items to the code chunking strategy; languages without an
                 # inner chunker fall back to one code_block chunk
                 # (standard_code_chunking_strategy.py:85-94)
-                import hashlib
-
                 visited.add(sr)
-                inner = _INNER_CODE_CHUNKERS.get(item.get("code_language"))
+                code_text = item["text"]
+                inner = code_chunker(item.get("code_language"))
                 if inner is not None:
-                    yield from inner(item["text"], doc_item=item, origin=doc.origin)
+                    yield from inner.chunk_code(code_text, doc_item=item, origin=doc.origin)
                 else:
-                    code_text = item["text"]
-                    yield {
-                        "text": code_text,
-                        "meta": {
-                            "schema_name": "docling_core.transforms.chunker.CodeDocMeta",
-                            "version": "1.0.0",
-                            "doc_items": [
-                                {
-                                    k: item[k]
-                                    for k in ("self_ref", "parent", "children",
-                                              "content_layer", "label", "prov")
-                                    if k in item
-                                }
-                            ],
-                            **({"origin": doc.origin} if doc.origin else {}),
-                            "sha256": int(
-                                hashlib.sha1(code_text.encode("utf-8")).hexdigest(), 16
-                            ),
-                            "start_line": 1,
-                            "end_line": len(code_text.splitlines()),
-                            "chunk_type": "code_block",
-                        },
-                    }
+                    meta = code_meta(
+                        item,
+                        doc.origin or None,
+                        sha256=_sha(code_text),
+                        start_line=1,
+                        end_line=len(code_text.splitlines()),
+                        chunk_type="code_block",
+                    )
+                    yield {"text": code_text, "meta": meta}
                 continue
             ser_res = ser.serialize(item=item, visited=visited)
         else:

@@ -23,7 +23,7 @@ Reference quirks preserved on purpose (the golden encodes them):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from docling_core_spark.functions.code_tree import (
     Node,
@@ -556,22 +556,4 @@ class CChunker(TreeChunker):
         return self.idents_in(lo, hi)
 
 
-def chunk_c_code(
-    code: str,
-    *,
-    doc_item: Optional[dict] = None,
-    origin: Optional[dict] = None,
-    tokenizer=None,
-    max_tokens: int = 5000,
-    min_chunk_size: int = 300,
-) -> Iterator[dict]:
-    """Chunk one C source file; yields CodeChunk-shaped dicts."""
-    if not code.strip():
-        return
-    yield from CChunker(code).chunk(
-        doc_item=doc_item,
-        origin=origin,
-        tokenizer=tokenizer,
-        max_tokens=max_tokens,
-        min_chunk_size=min_chunk_size,
-    )
+chunk_c_code = CChunker.chunk_code

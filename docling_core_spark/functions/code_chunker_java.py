@@ -14,8 +14,6 @@ method of an anonymous inner class is not emitted as its own chunk.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
 from docling_core_spark.functions.code_tree import (
     Node,
     Tok,
@@ -370,13 +368,13 @@ class JavaChunker(TreeChunker):
         node = func
         while node.parent is not None:
             if node.type in self.object_declarations:
-                with_doc, without_doc = self._java_object_context(node)
+                with_doc, without_doc = self.class_context(node)
                 context.insert(0, with_doc)
                 context_no_doc.insert(0, without_doc)
             node = node.parent
         return "".join(context).rstrip(), "".join(context_no_doc).rstrip()
 
-    def _java_object_context(self, node: Node) -> tuple[str, str]:
+    def build_class_context(self, node: Node) -> tuple[str, str]:
         body = node.field(self.class_body_field)
         if body is None:
             text = self.to_str(node)
@@ -441,22 +439,4 @@ class JavaChunker(TreeChunker):
         ]
 
 
-def chunk_java_code(
-    code: str,
-    *,
-    doc_item: Optional[dict] = None,
-    origin: Optional[dict] = None,
-    tokenizer=None,
-    max_tokens: int = 5000,
-    min_chunk_size: int = 300,
-) -> Iterator[dict]:
-    """Chunk one Java source file; yields CodeChunk-shaped dicts."""
-    if not code.strip():
-        return
-    yield from JavaChunker(code).chunk(
-        doc_item=doc_item,
-        origin=origin,
-        tokenizer=tokenizer,
-        max_tokens=max_tokens,
-        min_chunk_size=min_chunk_size,
-    )
+chunk_java_code = JavaChunker.chunk_code

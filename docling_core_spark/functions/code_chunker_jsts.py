@@ -26,7 +26,7 @@ expressions inside them are not collected as chunks.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from docling_core_spark.functions.code_tree import (
     Node,
@@ -478,43 +478,5 @@ class JsChunker(TsChunker):
     grammar (_language_code_chunkers.py:1195-1197)."""
 
 
-def chunk_ts_code(
-    code: str,
-    *,
-    doc_item: Optional[dict] = None,
-    origin: Optional[dict] = None,
-    tokenizer=None,
-    max_tokens: int = 5000,
-    min_chunk_size: int = 300,
-) -> Iterator[dict]:
-    """Chunk one TypeScript source file; yields CodeChunk-shaped dicts."""
-    if not code.strip():
-        return
-    yield from TsChunker(code).chunk(
-        doc_item=doc_item,
-        origin=origin,
-        tokenizer=tokenizer,
-        max_tokens=max_tokens,
-        min_chunk_size=min_chunk_size,
-    )
-
-
-def chunk_js_code(
-    code: str,
-    *,
-    doc_item: Optional[dict] = None,
-    origin: Optional[dict] = None,
-    tokenizer=None,
-    max_tokens: int = 5000,
-    min_chunk_size: int = 300,
-) -> Iterator[dict]:
-    """Chunk one JavaScript source file; yields CodeChunk-shaped dicts."""
-    if not code.strip():
-        return
-    yield from JsChunker(code).chunk(
-        doc_item=doc_item,
-        origin=origin,
-        tokenizer=tokenizer,
-        max_tokens=max_tokens,
-        min_chunk_size=min_chunk_size,
-    )
+chunk_ts_code = TsChunker.chunk_code
+chunk_js_code = JsChunker.chunk_code

@@ -1,15 +1,17 @@
-"""Shared infrastructure for the non-Python code chunkers (C8).
+"""Shared infrastructure for the code chunkers (C8).
 
-The reference chunks Java/C/JS/TS with tree-sitter
+The reference chunks Python/Java/C/JS/TS with tree-sitter
 (reference code_chunking/_language_code_chunkers.py:416-989 _CodeChunker base,
 _utils.py helpers); tree-sitter is not installable here, so this module
 provides the minimal node surface those semantics need — a ``Node`` with
 byte ranges / fields / named siblings, a ``Source`` byte-offset view, and a
 C-family lexer — plus ``TreeChunker``, a faithful re-expression of the
-reference base-class chunking pipeline over that surface.  Per-language
-parsers (code_chunker_java.py, code_chunker_c.py, code_chunker_jsts.py)
-build the declaration-level tree and token classifications; byte parity is
-pinned by the reference chunker_repo goldens.
+reference base-class chunking pipeline over that surface, and
+``CODE_CHUNKERS``, the one code_language -> chunker registry.  Per-language
+parsers (code_chunker.py for Python on ast + tokenize, code_chunker_java.py,
+code_chunker_c.py, code_chunker_jsts.py) build the declaration-level tree
+and token classifications; byte parity is pinned by the reference
+chunker_repo goldens.
 
 Reference quirks preserved on purpose (encoded in the goldens):
 - ``_build_imports`` always appends a trailing newline, so a chunk with no
@@ -26,16 +28,50 @@ Reference quirks preserved on purpose (encoded in the goldens):
 from __future__ import annotations
 
 import hashlib
+import importlib
 from bisect import bisect_right
 from typing import Any, Iterator, Optional
 
 _SCHEMA_NAME = "docling_core.transforms.chunker.CodeDocMeta"
 _VERSION = "1.0.0"
+_DOC_ITEM_KEYS = ("self_ref", "parent", "children", "content_layer", "label", "prov")
 _COPYRIGHT_WORDS = ("copyright", "license", "licensed under", "all rights reserved")
+
+# code_language -> (module under docling_core_spark.functions, TreeChunker
+# subclass), imported on first use (reference
+# standard_code_chunking_strategy.py:29-35 _INNER_CHUNKERS_BY_LANG)
+CODE_CHUNKERS = {
+    "Python": ("code_chunker", "PythonChunker"),
+    "TypeScript": ("code_chunker_jsts", "TsChunker"),
+    "JavaScript": ("code_chunker_jsts", "JsChunker"),
+    "C": ("code_chunker_c", "CChunker"),
+    "Java": ("code_chunker_java", "JavaChunker"),
+}
+
+
+def code_chunker(language: Optional[str]) -> Optional[type]:
+    """The TreeChunker subclass for a code_language, or None."""
+    spec = CODE_CHUNKERS.get(language)
+    if spec is None:
+        return None
+    module = importlib.import_module(f"docling_core_spark.functions.{spec[0]}")
+    return getattr(module, spec[1])
 
 
 def _sha(content: str) -> int:
     return int(hashlib.sha1(content.encode("utf-8")).hexdigest(), 16)
+
+
+def code_meta(doc_item: Optional[dict], origin: Optional[dict], **fields: Any) -> dict:
+    """CodeDocMeta of one chunk: schema, the projected doc item, the origin,
+    then ``fields`` in order."""
+    out = {"schema_name": _SCHEMA_NAME, "version": _VERSION}
+    if doc_item is not None:
+        out["doc_items"] = [{k: doc_item[k] for k in _DOC_ITEM_KEYS if k in doc_item}]
+    if origin is not None:
+        out["origin"] = origin
+    out.update(fields)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -478,14 +514,39 @@ class TreeChunker:
     chunk_suffix: str = "\n}"
     class_body_field: str = "body"
     name_field: str = "name"
+    source_type: type = Source
 
     def __init__(self, code: str):
-        self.src = Source(code)
+        self.src = self.source_type(code)
         self.root = self.parse(code)
         # list[(name, start_byte)] of identifier tokens that tree-sitter
         # would type as one of the language's counted identifier kinds
         self.idents: list[tuple[str, int]] = self.collect_idents()
         self._ident_starts = [s for _, s in self.idents]
+        self._class_contexts: dict[Node, tuple[str, str]] = {}
+
+    @classmethod
+    def chunk_code(
+        cls,
+        code: str,
+        *,
+        doc_item: Optional[dict] = None,
+        origin: Optional[dict] = None,
+        tokenizer: Optional[Any] = None,
+        max_tokens: int = 5000,
+        min_chunk_size: int = 300,
+    ) -> Iterator[dict]:
+        """Chunk one source file; yields CodeChunk-shaped dicts (nothing for
+        a blank file)."""
+        if not code.strip():
+            return
+        yield from cls(code).chunk(
+            doc_item=doc_item,
+            origin=origin,
+            tokenizer=tokenizer,
+            max_tokens=max_tokens,
+            min_chunk_size=min_chunk_size,
+        )
 
     # -- language hooks -------------------------------------------------------
 
@@ -520,13 +581,16 @@ class TreeChunker:
     def to_str(self, node: Node) -> str:
         return self.src.to_str(node.start, node.end)
 
-    def idents_in(self, start: int, end: int) -> set[str]:
+    def idents_in(self, start: int, end: int, skip: frozenset = frozenset()) -> set[str]:
+        """Identifiers starting in [start, end), except those at ``skip``."""
         lo = bisect_right(self._ident_starts, start - 1)
         out = set()
         for i in range(lo, len(self.idents)):
-            if self.idents[i][1] >= end:
+            name, pos = self.idents[i]
+            if pos >= end:
                 break
-            out.add(self.idents[i][0])
+            if pos not in skip:
+                out.add(name)
         return out
 
     def is_docstring(self, node: Node) -> bool:
@@ -538,10 +602,19 @@ class TreeChunker:
             return self.src.text(sib.start, sib.end)
         return ""
 
+    def comment_anchor(self, node: Node) -> Node:
+        """The node whose preceding sibling comments belong to ``node``."""
+        return node
+
+    def top_level_comments(self) -> list[tuple[int, int]]:
+        """Byte ranges of the top-level comments (a copyright notice among
+        them is never orphaned)."""
+        return [(n.start, n.end) for n in self.root.children if n.type in self.docs_types]
+
     def preceding_comment_ranges(self, node: Node) -> list[tuple[int, int]]:
         """Ranges of consecutive preceding same-level comments + the node."""
         ranges = []
-        cur = node.prev_sibling
+        cur = self.comment_anchor(node).prev_sibling
         while cur is not None and cur.type in self.docs_types:
             ranges.append((cur.start, cur.end))
             cur = cur.prev_sibling
@@ -550,7 +623,7 @@ class TreeChunker:
 
     def node_with_comments(self, node: Node) -> str:
         parts: list[str] = []
-        cur = node.prev_sibling
+        cur = self.comment_anchor(node).prev_sibling
         while cur is not None and cur.type in self.docs_types:
             parts.insert(0, self.to_str(cur))
             cur = cur.prev_sibling
@@ -718,13 +791,21 @@ class TreeChunker:
                 return child
         return None
 
+    def class_context(self, cls: Node) -> tuple[str, str]:
+        """build_class_context, computed once per class: every method of a
+        class reads the same context."""
+        ctx = self._class_contexts.get(cls)
+        if ctx is None:
+            ctx = self._class_contexts[cls] = self.build_class_context(cls)
+        return ctx
+
     def build_additional_context(self, func: Node) -> tuple[str, str]:
         context = ""
         context_no_doc = ""
         node = func
         while node.parent is not None:
             if node.type in self.class_definition_types:
-                with_doc, without_doc = self.build_class_context(node)
+                with_doc, without_doc = self.class_context(node)
                 context = f"{with_doc}\n{context}"
                 context_no_doc = f"{without_doc}\n{context_no_doc}"
             node = node.parent
@@ -750,29 +831,14 @@ class TreeChunker:
         module_vars = self.get_module_variables()
         used_ranges: list[tuple[int, int]] = []
 
-        item_proj = None
-        if doc_item is not None:
-            item_proj = {
-                k: doc_item[k]
-                for k in ("self_ref", "parent", "children", "content_layer", "label", "prov")
-                if k in doc_item
-            }
-
         def meta(**kw) -> dict:
-            out = {"schema_name": _SCHEMA_NAME, "version": _VERSION}
-            if item_proj is not None:
-                out["doc_items"] = [item_proj]
-            if origin is not None:
-                out["origin"] = origin
-            out.update(kw)
-            return out
+            return code_meta(doc_item, origin, **kw)
 
         # copyright comments at top level are never orphaned
-        for node in self.root.children:
-            if node.type in self.docs_types:
-                text = self.src.text(node.start, node.end).lower()
-                if any(w in text for w in _COPYRIGHT_WORDS):
-                    used_ranges.append((node.start, node.end))
+        for start, end in self.top_level_comments():
+            text = self.src.text(start, end).lower()
+            if any(w in text for w in _COPYRIGHT_WORDS):
+                used_ranges.append((start, end))
 
         all_chunks: list[dict] = []
 

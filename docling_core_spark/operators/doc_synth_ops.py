@@ -15,6 +15,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from docling_core_spark.functions.code_tree import code_chunker
 from docling_core_spark.operators.canon import canonical_order
 from pyspark.sql.types import (
     IntegerType,
@@ -197,28 +198,21 @@ export default Handler_{ident};
 """
 
 
+_SYNTH_LANGUAGES = {
+    "python": ("Python", synth_python_module),
+    "java": ("Java", synth_java_module),
+    "c": ("C", synth_c_module),
+    "ts": ("TypeScript", synth_ts_module),
+    "js": ("JavaScript", synth_js_module),
+}
+
+
 def _chunker_for(lang: str):
-    if lang == "python":
-        from docling_core_spark.functions.code_chunker import chunk_python_code
-
-        return synth_python_module, chunk_python_code
-    if lang == "java":
-        from docling_core_spark.functions.code_chunker_java import chunk_java_code
-
-        return synth_java_module, chunk_java_code
-    if lang == "c":
-        from docling_core_spark.functions.code_chunker_c import chunk_c_code
-
-        return synth_c_module, chunk_c_code
-    if lang == "ts":
-        from docling_core_spark.functions.code_chunker_jsts import chunk_ts_code
-
-        return synth_ts_module, chunk_ts_code
-    if lang == "js":
-        from docling_core_spark.functions.code_chunker_jsts import chunk_js_code
-
-        return synth_js_module, chunk_js_code
-    raise ValueError(f"unknown code-chunk language: {lang}")
+    """(module synthesizer, chunk function) for a ``lang`` operator key."""
+    if lang not in _SYNTH_LANGUAGES:
+        raise ValueError(f"unknown code-chunk language: {lang}")
+    language, synth = _SYNTH_LANGUAGES[lang]
+    return synth, code_chunker(language).chunk_code
 
 
 def code_chunk_rows(doc_id: str, text: str, lang: str = "python") -> list[dict]:
