@@ -14,8 +14,10 @@ over plain parquet so it runs anywhere):
   scale (about bucket bytes / advisory partition size files at cluster
   scale) instead of one small file per extract task;
 - then one read-back aggregate over the wave's own bucket dirs counts rows
-  and errors per bucket, and one row per bucket of the wave is appended to
-  the ``out_dir/_progress/`` log (commit point: data before progress);
+  and errors per bucket, and one record per bucket of the wave is written
+  durably to the ``out_dir/_progress/`` log (commit point: data before
+  progress); an unreadable record, torn by a machine crash, counts as
+  uncommitted, so its bucket re-runs;
 - two waves are in flight at once (double buffering): the next wave's tasks
   fill the cores the current wave's stragglers and driver-side steps leave
   idle.  Spark's FIFO scheduler still gives the earlier wave priority;
@@ -62,7 +64,10 @@ def completed_buckets(
         return set()
     done = set()
     for f in sorted(p.glob("*.json")):
-        rec = json.loads(f.read_text())
+        try:
+            rec = json.loads(f.read_text())
+        except (ValueError, OSError):
+            continue  # a torn record: its bucket is uncommitted and re-runs
         recorded = rec.get("n_buckets")
         if n_buckets is not None and recorded is not None and recorded != n_buckets:
             raise ValueError(
@@ -74,12 +79,29 @@ def completed_buckets(
     return done
 
 
-def _commit_bucket(out_dir: str, bucket: int, lineage: dict) -> None:
-    p = _progress_path(out_dir)
+def _write_record(p: Path, name: str, rec: dict) -> None:
+    """Atomically AND durably write the JSON record ``p/name``: write +
+    fsync a temp file, rename, fsync the directory.  Without the fsyncs a
+    machine crash can leave a durable rename pointing at zero-length data."""
     p.mkdir(parents=True, exist_ok=True)
-    tmp = p / f".bucket_{bucket}.json.tmp"
-    tmp.write_text(json.dumps({"bucket": bucket, **lineage}))
-    tmp.rename(p / f"bucket_{bucket}.json")
+    tmp = p / f".{name}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(json.dumps(rec))
+        fh.flush()
+        os.fsync(fh.fileno())
+    tmp.rename(p / name)
+    try:
+        dfd = os.open(p, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+    except OSError:
+        pass  # non-posix dir fsync: rename atomicity still holds
+
+
+def _commit_bucket(out_dir: str, bucket: int, lineage: dict) -> None:
+    _write_record(_progress_path(out_dir), f"bucket_{bucket}.json", {"bucket": bucket, **lineage})
 
 
 def run_checkpointed(
@@ -265,31 +287,14 @@ def last_committed_round(
 def commit_round(
     out_dir: str, round_no: int, meta: dict, params: Optional[dict] = None
 ) -> None:
-    """Atomically AND durably record round ``round_no`` as complete:
-    write + fsync the record, rename, fsync the directory — without the
-    fsyncs a machine crash (the multi-hour-job failure mode this protocol
-    exists for) can leave a durable rename pointing at zero-length data.
-    ``params`` (JSON-scalar dict) is stored for the resume-compatibility
-    check in committed_rounds."""
-    p = _rounds_path(out_dir)
-    p.mkdir(parents=True, exist_ok=True)
+    """Atomically AND durably record round ``round_no`` as complete (see
+    _write_record; a machine crash is the multi-hour-job failure mode this
+    protocol exists for).  ``params`` (JSON-scalar dict) is stored for the
+    resume-compatibility check in committed_rounds."""
     rec = {"round": round_no, **meta}
     if params is not None:
         rec["params"] = params
-    tmp = p / f".round_{round_no:06d}.json.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps(rec))
-        fh.flush()
-        os.fsync(fh.fileno())
-    tmp.rename(p / f"round_{round_no:06d}.json")
-    try:
-        dfd = os.open(p, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError:
-        pass  # non-posix dir fsync: rename atomicity still holds
+    _write_record(_rounds_path(out_dir), f"round_{round_no:06d}.json", rec)
 
 
 def prune_round_state(out_dir: str, before_round: int) -> None:
