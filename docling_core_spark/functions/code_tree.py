@@ -107,7 +107,7 @@ class Source:
 class Node:
     """Declaration-level parse node mirroring the tree-sitter node surface."""
 
-    __slots__ = ("type", "start", "end", "children", "parent", "fields", "named")
+    __slots__ = ("type", "start", "end", "children", "parent", "index", "fields", "named")
 
     def __init__(self, type: str, start: int, end: int, named: bool = True):
         self.type = type
@@ -115,11 +115,13 @@ class Node:
         self.end = end
         self.children: list[Node] = []
         self.parent: Optional[Node] = None
+        self.index = 0  # position in parent.children
         self.fields: dict[str, "Node"] = {}
         self.named = named
 
     def add(self, child: "Node", field: Optional[str] = None) -> "Node":
         child.parent = self
+        child.index = len(self.children)
         self.children.append(child)
         if field:
             self.fields[field] = child
@@ -130,11 +132,9 @@ class Node:
 
     @property
     def prev_sibling(self) -> Optional["Node"]:
-        if self.parent is None:
+        if self.parent is None or self.index == 0:
             return None
-        sibs = self.parent.children
-        i = sibs.index(self)
-        return sibs[i - 1] if i > 0 else None
+        return self.parent.children[self.index - 1]
 
     @property
     def prev_named_sibling(self) -> Optional["Node"]:
@@ -829,6 +829,7 @@ class TreeChunker:
         code = src.code
         imports = self.get_imports()
         module_vars = self.get_module_variables()
+        prefix, prefix_range = self.file_prefix()
         used_ranges: list[tuple[int, int]] = []
 
         def meta(**kw) -> dict:
@@ -850,7 +851,6 @@ class TreeChunker:
             end_row = src.row_col(func.end)[0]
             sig_row = src.row_col(self.function_signature_end(func))[0]
             name = self.function_name(func) or "unknown_function"
-            prefix, prefix_range = self.file_prefix()
 
             chunk_ranges: list[tuple[int, int]] = [(func.start, func.end)]
             if imports_text:
@@ -924,7 +924,6 @@ class TreeChunker:
             start_row = src.row_col(cls.start)[0]
             end_row = src.row_col(cls.end)[0]
             name = self.function_name(cls) or "unknown_class"
-            prefix, prefix_range = self.file_prefix()
 
             chunk_ranges = self.preceding_comment_ranges(cls)
             if imports_text:
