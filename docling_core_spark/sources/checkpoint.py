@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
@@ -136,6 +137,9 @@ def run_checkpointed(
         shutil.rmtree(data / f"bucket={b}", ignore_errors=True)
     waves = [todo[i : i + buckets_per_wave] for i in range(0, len(todo), buckets_per_wave)]
     errors: list[BaseException] = []
+    # one wave commits at a time: every commit called before a crash has
+    # landed, so a crash leaves a prefix of the commit calls durable
+    commit_lock = threading.Lock()
 
     def run_wave(n: int, wave: list[int]) -> int:
         if errors:
@@ -160,13 +164,14 @@ def run_checkpointed(
                 for r in written.groupBy("bucket").agg(F.count("*"), errs).collect():
                     stats[r[0]] = (r[1], r[2])
             wall = round(time.perf_counter() - t0, 3)
-            for b in wave:
-                n_rows, n_errors = stats[b]
-                _commit_bucket(
-                    out_dir,
-                    b,
-                    {"n_buckets": n_buckets, "rows": n_rows, "errors": n_errors, "wall_sec": wall},
-                )
+            with commit_lock:
+                for b in wave:
+                    n_rows, n_errors = stats[b]
+                    _commit_bucket(
+                        out_dir,
+                        b,
+                        {"n_buckets": n_buckets, "rows": n_rows, "errors": n_errors, "wall_sec": wall},
+                    )
             return sum(n_rows for n_rows, _ in stats.values())
         except BaseException as e:
             errors.append(e)
