@@ -30,7 +30,7 @@ import re
 from dataclasses import replace
 from typing import Any, Callable, Iterator, Optional
 
-from docling_core_spark.functions.code_tree import _sha, code_chunker, code_meta
+from docling_core_spark.functions.code_tree import _sha, chunker_class, code_meta
 from docling_core_spark.functions.serializers import (
     CHUNKING_OVERRIDES,
     DocSerializer,
@@ -149,7 +149,7 @@ def hierarchical_chunks(
                 # (standard_code_chunking_strategy.py:85-94)
                 visited.add(sr)
                 code_text = item["text"]
-                inner = code_chunker(item.get("code_language"))
+                inner = chunker_class(item.get("code_language"))
                 if inner is not None:
                     yield from inner.chunk_code(code_text, doc_item=item, origin=doc.origin)
                 else:

@@ -49,7 +49,7 @@ CODE_CHUNKERS = {
 }
 
 
-def code_chunker(language: Optional[str]) -> Optional[type]:
+def chunker_class(language: Optional[str]) -> Optional[type]:
     """The TreeChunker subclass for a code_language, or None."""
     spec = CODE_CHUNKERS.get(language)
     if spec is None:

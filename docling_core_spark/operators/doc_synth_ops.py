@@ -15,7 +15,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from docling_core_spark.functions.code_tree import code_chunker
+from docling_core_spark.functions.code_tree import chunker_class
 from docling_core_spark.operators.canon import canonical_order
 from pyspark.sql.types import (
     IntegerType,
@@ -212,7 +212,7 @@ def _chunker_for(lang: str):
     if lang not in _SYNTH_LANGUAGES:
         raise ValueError(f"unknown code-chunk language: {lang}")
     language, synth = _SYNTH_LANGUAGES[lang]
-    return synth, code_chunker(language).chunk_code
+    return synth, chunker_class(language).chunk_code
 
 
 def code_chunk_rows(doc_id: str, text: str, lang: str = "python") -> list[dict]:
