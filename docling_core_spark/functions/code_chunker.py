@@ -284,4 +284,6 @@ class PythonChunker(TreeChunker):
         return super()._is_only_function_in_class(ctor)
 
 
-chunk_python_code = PythonChunker.chunk_code
+def chunk_python_code(code: str, **kwargs):
+    """Chunk one Python source file; see TreeChunker.chunk_code."""
+    return PythonChunker.chunk_code(code, **kwargs)

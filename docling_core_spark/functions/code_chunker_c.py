@@ -556,4 +556,6 @@ class CChunker(TreeChunker):
         return self.idents_in(lo, hi)
 
 
-chunk_c_code = CChunker.chunk_code
+def chunk_c_code(code: str, **kwargs):
+    """Chunk one C source file; see TreeChunker.chunk_code."""
+    return CChunker.chunk_code(code, **kwargs)

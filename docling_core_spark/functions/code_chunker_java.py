@@ -439,4 +439,6 @@ class JavaChunker(TreeChunker):
         ]
 
 
-chunk_java_code = JavaChunker.chunk_code
+def chunk_java_code(code: str, **kwargs):
+    """Chunk one Java source file; see TreeChunker.chunk_code."""
+    return JavaChunker.chunk_code(code, **kwargs)

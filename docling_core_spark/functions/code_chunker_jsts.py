@@ -478,5 +478,11 @@ class JsChunker(TsChunker):
     grammar (_language_code_chunkers.py:1195-1197)."""
 
 
-chunk_ts_code = TsChunker.chunk_code
-chunk_js_code = JsChunker.chunk_code
+def chunk_ts_code(code: str, **kwargs):
+    """Chunk one TypeScript source file; see TreeChunker.chunk_code."""
+    return TsChunker.chunk_code(code, **kwargs)
+
+
+def chunk_js_code(code: str, **kwargs):
+    """Chunk one JavaScript source file; see TreeChunker.chunk_code."""
+    return JsChunker.chunk_code(code, **kwargs)
