@@ -39,6 +39,7 @@ from docling_core_spark.functions.serializers import (
     _PB_FMT,
     _res,
     _wrap,
+    best_prediction,
     get_text_direction,
     replace_page_breaks,
 )
@@ -942,10 +943,8 @@ class DocLangSerializer(DocSerializer):
             caption_head = self.serialize_captions(item).text
         meta = item.get("meta") or {}
         classification = (meta.get("classification") or {}).get("predictions") or []
-        class_name = None
-        if classification:
-            main = max(classification, key=lambda pr: pr.get("confidence", 0.0))
-            class_name = main.get("class_name")
+        main = best_prediction(classification)
+        class_name = main.get("class_name") if main else None
         picture_label = self._element_label(
             _OTHER if class_name == "other" else class_name
         ) if class_name else self._element_label(None)
