@@ -25,12 +25,11 @@ Helpers shared by several formats are defined here once.
 from __future__ import annotations
 
 import html as _html
-import json
 import re
 import sys
 import textwrap
 import unicodedata
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from typing import Any, Iterator, Optional
 
 from docling_core_spark.functions.mdtable import format_github_table
@@ -201,73 +200,61 @@ class DocSerializer:
     # -- precomputed sets ------------------------------------------------
 
     def captions_of_some_item(self) -> set:
-        """Refs of text items that serve as captions of floating items.
-
-        Params-independent, so memoized on the Doc (the fused extract stage
-        builds three serializers per row; one traversal serves all)."""
+        """Refs of text items that serve as captions of floating items
+        (also fills ``_footnotes_of``; params-independent, so shared by
+        every serializer of a :meth:`Doc.read_scope`)."""
         if self._captions_of is None:
-            cached = self.doc.extra.get("_cap_ftn_sets")
-            if cached is None:
-                caps: set = set()
-                ftns: set = set()
-                for item, _ in self.doc.iterate_items_cached(
-                    with_groups=True, traverse_pictures=True, included_content_layers=M.CONTENT_LAYERS
-                ):
-                    for cap in item.get("captions", ()):
-                        caps.add(cap["$ref"])
-                    for ftn in item.get("footnotes", ()):
-                        ftns.add(ftn["$ref"])
-                cached = self.doc.extra["_cap_ftn_sets"] = (caps, ftns)
-            self._captions_of, self._footnotes_of = cached
+            self._captions_of, self._footnotes_of = self.doc.memoized(
+                ("captions_footnotes",), self._collect_captions_footnotes
+            )
         return self._captions_of
 
-    def footnotes_of_some_item(self) -> set:
-        """Refs of text items that serve as footnotes of floating items."""
-        if self._footnotes_of is None:
-            self.captions_of_some_item()
-        return self._footnotes_of
+    def _collect_captions_footnotes(self) -> tuple[set, set]:
+        caps: set = set()
+        ftns: set = set()
+        for item, _ in self.doc.iterate_items_cached(
+            with_groups=True, traverse_pictures=True, included_content_layers=M.CONTENT_LAYERS
+        ):
+            for cap in item.get("captions", ()):
+                caps.add(cap["$ref"])
+            for ftn in item.get("footnotes", ()):
+                ftns.add(ftn["$ref"])
+        return caps, ftns
 
     def get_excluded_refs(self) -> set:
-        """Refs excluded by label/layer/page/index-slice allowlists.
-
-        Params-keyed memo on the Doc: the fused extract stage builds five+
-        serializers per row whose exclusion params collapse to ~2 distinct
-        signatures (body-layer vs all-layer defaults), so the label/layer
-        sweep runs once per signature instead of once per serializer.
-        Invalidated with the other read-path memos (Doc._invalidate_memos).
-        """
+        """Refs excluded by label/layer/page/index-slice allowlists (shared
+        by the serializers of a :meth:`Doc.read_scope` whose exclusion
+        params are equal)."""
         if self._excluded is None:
             p = self.params
             key = (
+                "excluded",
                 frozenset(p.labels),
                 frozenset(p.layers),
                 tuple(sorted(p.pages)) if p.pages is not None else None,
                 p.start_idx,
                 p.stop_idx,
             )
-            memo = self.doc.extra.setdefault("_excluded_memo", {})
-            cached = memo.get(key)
-            if cached is not None:
-                self._excluded = cached
-                return cached
-            refs = set()
-            for ix, (item, _) in enumerate(
-                self._iter_pb(node=None, traverse_pictures=True, add_page_breaks=False)
-            ):
-                out_of_slice = ix < p.start_idx or ix >= p.stop_idx
-                bad = out_of_slice
-                if not bad and M.is_doc_item(item):
-                    if item.get("label") not in p.labels or M.content_layer(item) not in p.layers:
-                        bad = True
-                    elif p.pages is not None:
-                        prov = item.get("prov") or []
-                        if not prov or prov[0].get("page_no") not in p.pages:
-                            bad = True
-                if bad:
-                    refs.add(item["self_ref"])
-            memo[key] = refs
-            self._excluded = refs
+            self._excluded = self.doc.memoized(key, self._collect_excluded)
         return self._excluded
+
+    def _collect_excluded(self) -> set:
+        p = self.params
+        refs = set()
+        for ix, (item, _) in enumerate(
+            self._iter_pb(node=None, traverse_pictures=True, add_page_breaks=False)
+        ):
+            bad = ix < p.start_idx or ix >= p.stop_idx
+            if not bad and M.is_doc_item(item):
+                if item.get("label") not in p.labels or M.content_layer(item) not in p.layers:
+                    bad = True
+                elif p.pages is not None:
+                    prov = item.get("prov") or []
+                    if not prov or prov[0].get("page_no") not in p.pages:
+                        bad = True
+            if bad:
+                refs.add(item["self_ref"])
+        return refs
 
     # -- iteration with page breaks (reference common.py:82-137) ---------
 
@@ -280,10 +267,8 @@ class DocSerializer:
         _state: Optional[dict] = None,
     ) -> "Iterator[tuple[dict, int]] | list[tuple[dict, int]]":
         if not add_page_breaks and _visited is None and _state is None:
-            # no page-break interleaving: hand back the memoized traversal
-            # LIST itself — callers only iterate, and a list iterates with
-            # zero generator frame resumptions (one per item otherwise; the
-            # hottest non-parse line of the row profile)
+            # no page-break interleaving: hand back the traversal list
+            # itself (shared inside a read scope) — callers only iterate
             return self.doc.iterate_items_cached(
                 root=node,
                 with_groups=True,
@@ -557,22 +542,13 @@ class DocSerializer:
         return grid
 
     def _grid_c(self, data: dict) -> list[list[dict]]:
-        """Memoized :meth:`_grid`: all five formats walk the same immutable
-        table, so one dense-grid build feeds every serializer.  Keyed by the
-        data dict's identity; the entry pins the dict so its id cannot be
-        recycled while the memo lives.  Stored on ``doc.extra`` (never
-        dumped) and dropped by ``Doc._invalidate_memos`` on any mutation.
-        Callers never mutate the shared grid (cells are the original dicts).
-        """
+        """:meth:`_grid`, built once per table in a :meth:`Doc.read_scope`.
+        Keyed by the data dict's identity; the entry pins the dict so its id
+        cannot be recycled while the scope lasts.  Callers never mutate the
+        shared grid (cells are the original dicts)."""
         if not data:
             return []
-        memo = self.doc.extra.setdefault("_grid_memo", {})
-        e = memo.get(id(data))
-        if e is not None and e[0] is data:
-            return e[1]
-        g = self._grid(data)
-        memo[id(data)] = (data, g)
-        return g
+        return self.doc.memoized(("grid", id(data)), lambda: (data, self._grid(data)))[1]
 
     def _cell_text(self, cell: dict, visited: Optional[set] = None) -> str:
         """Resolve a cell's text; RichTableCells flatten their subtree."""

@@ -19,8 +19,9 @@ document.py:3235-3313).
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
 from functools import lru_cache
-from typing import Any, Iterable, Iterator, Optional
+from typing import Any, Callable, Iterable, Iterator, Optional
 
 CURRENT_VERSION = "1.10.0"  # reference common/constants.py:7
 
@@ -328,6 +329,11 @@ class Doc:
 
     Mirrors the data model of the reference (document.py:174-213) but stores
     items as plain dicts for cheap JSON round-trips inside Arrow-batch UDFs.
+
+    Read memos (traversal lists, caption and exclusion sets, table grids)
+    exist only inside :meth:`read_scope`, which ``extract_row`` opens around
+    its exports.  Outside a scope every read computes afresh, so no mutator,
+    and no direct edit of an item dict, has to invalidate anything.
     """
 
     __slots__ = (
@@ -347,6 +353,7 @@ class Doc:
         "field_items",
         "pages",
         "extra",
+        "_memo",
     )
 
     def __init__(self, name: str = "document", origin: Optional[dict] = None) -> None:
@@ -378,6 +385,7 @@ class Doc:
         self.field_items: list[dict] = []
         self.pages: dict = {}
         self.extra: dict = {}
+        self._memo: Optional[dict] = None
 
     # ------------------------------------------------------------------
     # Ref resolution (reference common/reference.py:32-62)
@@ -410,7 +418,6 @@ class Doc:
     # ------------------------------------------------------------------
 
     def _attach(self, array_name: str, item: dict, parent: Optional[dict]) -> dict:
-        self._invalidate_memos()
         arr = getattr(self, array_name)
         cref = f"#/{array_name}/{len(arr)}"
         item["self_ref"] = cref
@@ -718,7 +725,6 @@ class Doc:
         ):
             setattr(self, array_name, getattr(rebuilt, array_name))
         self.pages = rebuilt.pages
-        self._invalidate_memos()
 
     def add_table_cell(self, table_item: dict, cell: dict) -> dict:
         """Append a (possibly rich) cell to a table (reference document.py:5494);
@@ -1047,6 +1053,37 @@ class Doc:
             for child in reversed(kids):
                 stack.append((child, next_depth))
 
+    @contextmanager
+    def read_scope(self) -> Iterator["Doc"]:
+        """Share read memos among the consumers run inside the block.
+
+        Inside the scope, :meth:`memoized` keeps what it computes, so the
+        formats and the chunker of one row walk the tree once per distinct
+        (root, flags) and build each table grid once.  The doc must not be
+        mutated inside the scope.  Outside one, every call computes afresh,
+        so mutators need not know that memos exist.  A nested scope shares
+        the outer scope's memos.
+        """
+        if self._memo is not None:
+            yield self
+            return
+        self._memo = {}
+        try:
+            yield self
+        finally:
+            self._memo = None
+
+    def memoized(self, key: tuple, compute: Callable[[], Any]) -> Any:
+        """``compute()`` (never None), kept under ``key`` while a
+        :meth:`read_scope` is open."""
+        memo = self._memo
+        if memo is None:
+            return compute()
+        out = memo.get(key)
+        if out is None:
+            out = memo[key] = compute()
+        return out
+
     def iterate_items_cached(
         self,
         root: Optional[dict] = None,
@@ -1054,137 +1091,24 @@ class Doc:
         traverse_pictures: bool = False,
         included_content_layers: Optional[set[str]] = None,
     ) -> list[tuple[dict, int]]:
-        """Memoized :meth:`iterate_items` for READ-ONLY consumers.
-
-        The fused extract stage runs five serializers plus two chunkers per
-        row, and every one re-walks the same immutable tree (the hottest
-        profile line after the round-3 iterate_items rewrite).  This caches
-        the traversal list per (root, flags, layers) on ``doc.extra`` so one
-        walk feeds all formats.  Any mutation path invalidates via
-        :meth:`_invalidate_memos` (same contract as ``_cap_ftn_sets``) —
-        callers that mutate while iterating must use :meth:`iterate_items`.
-        """
+        """:meth:`iterate_items` as a list, for consumers that only read;
+        shared per (root, flags, layers) inside a :meth:`read_scope`."""
         layers = frozenset(
             included_content_layers if included_content_layers is not None else DEFAULT_CONTENT_LAYERS
         )
         key = (
+            "items",
             root["self_ref"] if root is not None else None,
             with_groups,
             traverse_pictures,
             layers,
         )
-        memo = self.extra.get("_iter_memo")
-        if memo is None:
-            memo = self.extra["_iter_memo"] = {}
-        out = memo.get(key)
-        if out is None:
-            if root is not None:
-                # pre-order contiguity: a subtree's walk is a contiguous
-                # slice of the cached full-body walk (descent is never
-                # pruned differently for the same flags), so the thousands
-                # of per-group subtree walks the serializers issue collapse
-                # to index + slice + depth rebase instead of fresh DFS
-                full_key = (None, with_groups, traverse_pictures, layers)
-                full = memo.get(full_key)
-                if full is not None:
-                    idx_key = ("_idx",) + full_key
-                    idx = memo.get(idx_key)
-                    if idx is None:
-                        idx = memo[idx_key] = {
-                            it["self_ref"]: i for i, (it, _) in enumerate(full)
-                        }
-                    root_ref = root["self_ref"]
-                    i = idx.get(root_ref)
-                    if i is not None:
-                        d0 = full[i][1]
-                        j, n = i + 1, len(full)
-                        while j < n and full[j][1] > d0:
-                            j += 1
-                        # Yield filters (layers / with_groups) never prune
-                        # the DESCENT, so children of a yield-filtered
-                        # sibling can follow root's subtree in the full walk
-                        # at depth > d0 and be absorbed into the depth scan.
-                        # Root's true descendants are still contiguous in
-                        # pre-order, so aliens form a contiguous suffix:
-                        # truncate at the first item whose parent chain
-                        # leaves the root subtree.
-                        sl = full[i:j]
-                        resolve = self.resolve
-                        inside = {root_ref}
-                        cut = len(sl)
-                        for k in range(1, len(sl)):
-                            it = sl[k][0]
-                            chain = [it["self_ref"]]
-                            p = it.get("parent")
-                            ok = False
-                            while p is not None:
-                                pref = p["$ref"]
-                                if pref in inside:
-                                    ok = True
-                                    break
-                                chain.append(pref)
-                                p = resolve(pref).get("parent")
-                            if not ok:
-                                cut = k
-                                break
-                            inside.update(chain)
-                        out = memo[key] = [(it, d - d0) for it, d in sl[:cut]]
-                        return out
-            out = memo[key] = self._iterate_items_list(
-                root=root,
-                with_groups=with_groups,
-                traverse_pictures=traverse_pictures,
-                included_content_layers=layers,
-            )
-        return out
-
-    def _iterate_items_list(
-        self,
-        root: Optional[dict] = None,
-        with_groups: bool = False,
-        traverse_pictures: bool = False,
-        included_content_layers: Optional[set[str]] = None,
-    ) -> list[tuple[dict, int]]:
-        """:meth:`iterate_items` materialized without generator frames.
-
-        Same DFS loop with ``append`` in place of ``yield`` — the memoized
-        cache-miss walk paid one generator resumption per item (~140/doc in
-        the extract profile); mutation-safe consumers keep the lazy
-        :meth:`iterate_items`.  tests pin list == generator across flags.
-        """
-        layers = included_content_layers if included_content_layers is not None else DEFAULT_CONTENT_LAYERS
-        node = root if root is not None else self.body
-        resolve = self.resolve
-        out: list[tuple[dict, int]] = []
-        append = out.append
-        stack: list[tuple[dict, int]] = [(node, 0)]
-        group_arrays = _GROUP_ARRAYS | {BODY, FURNITURE}
-        while stack:
-            item, depth = stack.pop()
-            arr = ref_array(item["self_ref"])
-            grp = arr in group_arrays
-            if (not grp or with_groups) and content_layer(item) in layers:
-                append((item, depth))
-            children = item.get("children", ())
-            if not children:
-                continue
-            if not traverse_pictures and arr == "pictures":
-                allowed = {r["$ref"] for r in item.get("captions", ())}
-                kids = [resolve(r["$ref"]) for r in children if r["$ref"] in allowed]
-            else:
-                kids = [resolve(r["$ref"]) for r in children]
-            next_depth = depth + 1
-            for child in reversed(kids):
-                stack.append((child, next_depth))
-        return out
-
-    def _invalidate_memos(self) -> None:
-        """Drop every read-path memo (serializer caption/footnote sets and
-        cached traversals) — called by every mutation path."""
-        self.extra.pop("_cap_ftn_sets", None)
-        self.extra.pop("_iter_memo", None)
-        self.extra.pop("_excluded_memo", None)
-        self.extra.pop("_grid_memo", None)
+        return self.memoized(key, lambda: list(self.iterate_items(
+            root=root,
+            with_groups=with_groups,
+            traverse_pictures=traverse_pictures,
+            included_content_layers=layers,
+        )))
 
     # ------------------------------------------------------------------
     # (De)serialization
@@ -1239,6 +1163,7 @@ class Doc:
         for arr in _ALL_ARRAYS:
             setattr(doc, arr, d.get(arr) or [])
         doc.pages = d.get("pages") or {}
+        doc._memo = None
         doc.extra = {k: v for k, v in d.items() if k not in set(_ALL_ARRAYS) | {
             "schema_name", "version", "name", "origin", "body", "furniture", "pages"}}
         # patch deprecated ordered_list group label (reference group.py:33-37)

@@ -20,13 +20,8 @@ def _children(item: dict) -> list:
     return item.setdefault("children", [])
 
 
-def _invalidate(doc: Doc) -> None:
-    doc._invalidate_memos()
-
-
 def insert_sibling(doc: Doc, item: dict, array: str, sibling: dict, after: bool = True) -> dict:
     """Insert a new item next to a sibling (reference insert_item_*_sibling)."""
-    _invalidate(doc)
     if sibling is doc.body or sibling["self_ref"] == "#/body":
         raise ValueError("cannot insert a sibling of the document body")
     parent = doc.parent_of(sibling)
@@ -60,7 +55,6 @@ def _iter_with_stack(doc: Doc, node: dict, stack: tuple = ()) -> Iterator[tuple[
 
 def delete_items(doc: Doc, items: list[dict]) -> None:
     """Delete items and their subtrees; compact and rewrite all refs."""
-    _invalidate(doc)
     target_refs = {it["self_ref"] for it in items}
     to_delete: dict[tuple, str] = {}
     for item, stack in _iter_with_stack(doc, doc.body):
@@ -144,7 +138,6 @@ def replace_item(doc: Doc, old_item: dict, new_item: dict, array: str) -> dict:
 
 
 def _move_subtree(doc: Doc, item: dict, new_parent: dict) -> None:
-    _invalidate(doc)
     old_parent = doc.parent_of(item)
     if old_parent is not None:
         old_parent["children"] = [

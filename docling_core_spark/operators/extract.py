@@ -93,28 +93,31 @@ def extract_row(
     per-word memo amortizes across rows."""
     t0 = time.perf_counter_ns()
     doc = parse_html(html or b"", name=url)
-    md = export_to_markdown(doc)
-    txt = export_to_text(doc)
     html_out = None
     doctags_out = None
     doclang_out = None
-    if emit_html:
-        from docling_core_spark.functions.html_out import export_to_html
-
-        html_out = export_to_html(doc)
-    if emit_doctags:
-        from docling_core_spark.functions.doctags import export_to_doctags
-
-        doctags_out = export_to_doctags(doc)
-    if emit_doclang:
-        from docling_core_spark.functions.doclang_out import export_to_doclang
-
-        doclang_out = export_to_doclang(doc, pretty_indentation=None)
     tok = tokenizer if tokenizer is not None else RegexTokenizer(max_tokens)
-    if chunker == "hybrid":
-        raw_chunks = HybridChunker(tokenizer=tok).chunk(doc)
-    else:
-        raw_chunks = list(hierarchical_chunks(doc))
+    # nothing mutates the doc until to_json below, so the formats and the
+    # chunker share one traversal per (root, flags) and one grid per table
+    with doc.read_scope():
+        md = export_to_markdown(doc)
+        txt = export_to_text(doc)
+        if emit_html:
+            from docling_core_spark.functions.html_out import export_to_html
+
+            html_out = export_to_html(doc)
+        if emit_doctags:
+            from docling_core_spark.functions.doctags import export_to_doctags
+
+            doctags_out = export_to_doctags(doc)
+        if emit_doclang:
+            from docling_core_spark.functions.doclang_out import export_to_doclang
+
+            doclang_out = export_to_doclang(doc, pretty_indentation=None)
+        if chunker == "hybrid":
+            raw_chunks = HybridChunker(tokenizer=tok).chunk(doc)
+        else:
+            raw_chunks = list(hierarchical_chunks(doc))
     chunks = [
         {
             "chunk_idx": i,

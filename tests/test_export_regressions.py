@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from docling_core_spark.functions.doclang_out import export_to_doclang
+from docling_core_spark.functions.serializers import export_to_markdown, export_to_text
 from docling_core_spark.model.doc import Doc
 
 
@@ -23,3 +24,32 @@ def test_doclang_picture_class_skips_none_confidence():
     out = export_to_doclang(doc)
     assert '<label value="bar_chart"/>' in out
     assert "no_confidence" not in out
+
+
+def _cell(text, row, col):
+    return {"text": text, "row_span": 1, "col_span": 1,
+            "start_row_offset_idx": row, "end_row_offset_idx": row + 1,
+            "start_col_offset_idx": col, "end_col_offset_idx": col + 1}
+
+
+def test_export_after_add_table_cell_shows_the_new_cell():
+    """An export after ``add_table_cell`` renders the new cell, not a grid
+    remembered from the export before it."""
+    doc = Doc(name="t")
+    table = doc.add_table({"num_rows": 1, "num_cols": 2, "table_cells": [_cell("a", 0, 0)]})
+    assert export_to_markdown(doc) == "| a   |    |\n|-----|----|"
+    doc.add_table_cell(table, _cell("b", 0, 1))
+    assert export_to_markdown(doc) == "| a   | b   |\n|-----|-----|"
+
+
+def test_export_after_content_layer_edit_drops_the_item():
+    """Moving an item to the furniture layer by a plain dict edit between two
+    exports takes it out of the second (body-only) export."""
+    doc = Doc(name="t")
+    doc.add_text("text", "keep")
+    moved = doc.add_text("text", "moved")
+    assert export_to_markdown(doc) == "keep\n\nmoved"
+    moved["content_layer"] = "furniture"
+    assert export_to_markdown(doc) == "keep"
+    assert export_to_text(doc) == "keep"
+

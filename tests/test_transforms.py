@@ -72,9 +72,9 @@ def test_concatenate_squeezes_names():
 
 
 def test_iterate_items_cached_subtree_not_polluted_by_filtered_sibling_children():
-    """Regression (round-8 ADVICE): yield filters don't prune descent, so a
-    yield-filtered sibling's children follow a subtree in the full walk at
-    depth > d0 — the cached slice must not absorb them."""
+    """Yield filters don't prune descent, so a yield-filtered sibling's
+    children follow a subtree in the full walk at depth > depth(subtree):
+    a subtree walk cached after the full one must not absorb them."""
     doc = Doc(name="t")
     grp = doc.add_group(name="g1")
     doc.add_text("text", "inside-1", parent=grp)
@@ -88,11 +88,12 @@ def test_iterate_items_cached_subtree_not_polluted_by_filtered_sibling_children(
 
     kw = dict(with_groups=True, traverse_pictures=False,
               included_content_layers={"body"})
-    # populate the full-body memo first so root= takes the slice path
-    full_cached = doc.iterate_items_cached(**kw)
-    assert [it["text"] for it, _ in full_cached if "text" in it] == [
-        "inside-1", "inside-2", "alien-body-child"]
-    got = doc.iterate_items_cached(root=grp, **kw)
+    with doc.read_scope():
+        full_cached = doc.iterate_items_cached(**kw)
+        assert [it["text"] for it, _ in full_cached if "text" in it] == [
+            "inside-1", "inside-2", "alien-body-child"]
+        got = doc.iterate_items_cached(root=grp, **kw)
+        assert doc.iterate_items_cached(root=grp, **kw) is got
     want = list(doc.iterate_items(root=grp, **kw))
     assert [(it["self_ref"], d) for it, d in got] == [
         (it["self_ref"], d) for it, d in want]
@@ -100,9 +101,9 @@ def test_iterate_items_cached_subtree_not_polluted_by_filtered_sibling_children(
 
 
 def test_iterate_items_cached_slice_keeps_filtered_groups_descendants():
-    """The parent-chain validation must not truncate legitimate descendants
-    whose direct parent was itself yield-filtered (a group under
-    with_groups=False, or a furniture node inside the subtree)."""
+    """A cached subtree walk keeps descendants whose direct parent was
+    itself yield-filtered (a group under with_groups=False, or a furniture
+    node inside the subtree)."""
     doc = Doc(name="t2")
     outer = doc.add_group(name="outer")
     inner = doc.add_group(name="inner", parent=outer)
@@ -116,36 +117,47 @@ def test_iterate_items_cached_slice_keeps_filtered_groups_descendants():
     for wg in (True, False):
         kw = dict(with_groups=wg, traverse_pictures=False,
                   included_content_layers={"body"})
-        doc._invalidate_memos()
-        doc.iterate_items_cached(**kw)
-        got = doc.iterate_items_cached(root=outer, **kw)
+        with doc.read_scope():
+            doc.iterate_items_cached(**kw)
+            got = doc.iterate_items_cached(root=outer, **kw)
         want = list(doc.iterate_items(root=outer, **kw))
         assert [(it["self_ref"], d) for it, d in got] == [
             (it["self_ref"], d) for it, d in want], f"with_groups={wg}"
 
 
-def test_iterate_items_list_matches_generator_all_flags():
-    """_iterate_items_list (the memo's materialized DFS) must equal the
+def test_iterate_items_cached_matches_generator_all_flags():
+    """iterate_items_cached, inside a read scope and outside one, equals the
     lazy iterate_items generator item-for-item under every flag combo."""
-    doc = Doc.from_dict(load_doc_json("doc/2106.09680v1.json"))
+    doc = Doc(name="t3")
+    lst = doc.add_list_group(name="list")
+    doc.add_list_item("one", parent=lst)
+    doc.add_list_item("two", parent=lst)
+    cap = doc.add_text("caption", "a caption")
+    pic = doc.add_picture(caption=cap)
+    doc.add_text("text", "inside the picture", parent=pic)
     # furniture-layer item with a body child: exercises the yield-filter path
     sib = doc.add_text("text", "furn", content_layer="furniture")
     doc.add_text("text", "body-child", parent=sib, content_layer="body")
     for with_groups in (False, True):
         for traverse_pictures in (False, True):
             for layers in (None, {"body"}, {"body", "furniture"}):
-                want = list(
-                    doc.iterate_items(
-                        with_groups=with_groups,
-                        traverse_pictures=traverse_pictures,
-                        included_content_layers=layers,
-                    )
-                )
-                got = doc._iterate_items_list(
-                    with_groups=with_groups,
-                    traverse_pictures=traverse_pictures,
-                    included_content_layers=layers,
-                )
-                assert [(id(it), d) for it, d in got] == [
-                    (id(it), d) for it, d in want
-                ]
+                kw = dict(with_groups=with_groups, traverse_pictures=traverse_pictures,
+                          included_content_layers=layers)
+                want = [(id(it), d) for it, d in doc.iterate_items(**kw)]
+                assert [(id(it), d) for it, d in doc.iterate_items_cached(**kw)] == want
+                with doc.read_scope():
+                    for _ in range(2):
+                        got = doc.iterate_items_cached(**kw)
+                        assert [(id(it), d) for it, d in got] == want
+
+
+def test_read_scope_keeps_memos_only_while_open():
+    doc = Doc(name="s")
+    doc.add_text("text", "a")
+    assert doc.iterate_items_cached() is not doc.iterate_items_cached()
+    with doc.read_scope():
+        first = doc.iterate_items_cached()
+        with doc.read_scope():
+            assert doc.iterate_items_cached() is first
+        assert doc.iterate_items_cached() is first
+    assert doc.iterate_items_cached() is not first
