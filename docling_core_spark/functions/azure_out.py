@@ -12,6 +12,7 @@ import json
 from dataclasses import dataclass
 from typing import Optional
 
+from docling_core_spark.functions.geometry import to_top_left_tuple
 from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
@@ -62,13 +63,18 @@ class AzureSerializer(DocSerializer):
         if not prov or not prov.get("bbox"):
             return None, None
         page_no = prov.get("page_no")
-        bbox = prov["bbox"]
-        l, t, r, b = bbox["l"], bbox["t"], bbox["r"], bbox["b"]
+        return page_no, _polygon(*self._top_left(prov["bbox"], self._page_height(page_no)))
+
+    def _page_height(self, page_no) -> Optional[float]:
         page = self.doc.pages.get(str(page_no)) or self.doc.pages.get(page_no)
-        if page and page.get("size") and bbox.get("coord_origin", "TOPLEFT").upper() == "BOTTOMLEFT":
-            page_h = page["size"]["height"]
-            t, b = page_h - t, page_h - b
-        return page_no, _polygon(l, t, r, b)
+        return (page.get("size") or {}).get("height") if page else None
+
+    @staticmethod
+    def _top_left(bbox: dict, page_h: Optional[float]) -> tuple:
+        """Top-left (l, t, r, b); kept as it is when the page has no height."""
+        if page_h is None:
+            return (bbox["l"], bbox["t"], bbox["r"], bbox["b"])
+        return to_top_left_tuple(bbox, page_h)
 
     def _serialize_text_item(self, item: dict, visited: set, is_inline_scope: bool) -> SerResult:
         page_no, poly = self._poly_for_item(item)
@@ -95,8 +101,7 @@ class AzureSerializer(DocSerializer):
             "boundingRegions": [{"pageNumber": page_no, "polygon": poly}],
             "cells": [],
         }
-        page = self.doc.pages.get(str(page_no)) or self.doc.pages.get(page_no)
-        page_h = (page.get("size") or {}).get("height") if page else None
+        page_h = self._page_height(page_no)
         for i, row in enumerate(self._grid_c(data)):
             for j, cell in enumerate(row):
                 if i != cell.get("start_row_offset_idx", i) or j != cell.get("start_col_offset_idx", j):
@@ -118,11 +123,8 @@ class AzureSerializer(DocSerializer):
                     cell_obj["kind"] = kind
                 bbox = cell.get("bbox")
                 if bbox is not None:
-                    l, t, r, b = bbox["l"], bbox["t"], bbox["r"], bbox["b"]
-                    if page_h is not None and bbox.get("coord_origin", "TOPLEFT").upper() == "BOTTOMLEFT":
-                        t, b = page_h - t, page_h - b
                     cell_obj["boundingRegions"] = [
-                        {"pageNumber": page_no, "polygon": _polygon(l, t, r, b)}
+                        {"pageNumber": page_no, "polygon": _polygon(*self._top_left(bbox, page_h))}
                     ]
                 table["cells"].append(cell_obj)
         self._acc["tables"].append(table)

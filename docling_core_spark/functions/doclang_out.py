@@ -32,6 +32,7 @@ from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 from xml.dom.minidom import parseString
 
+from docling_core_spark.functions.geometry import to_top_left_tuple
 from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
@@ -220,12 +221,6 @@ class DocLangSerializer(DocSerializer):
         size = page.get("size") or {}
         return size.get("width", 1.0), size.get("height", 1.0)
 
-    def _bbox_tl_tuple(self, bbox: dict, page_h: float) -> tuple[float, float, float, float]:
-        """(l, t, r, b) in top-left origin, reference BoundingBox.as_tuple order."""
-        if (bbox.get("coord_origin") or "TOPLEFT").upper() == "BOTTOMLEFT":
-            return (bbox["l"], page_h - bbox["t"], bbox["r"], page_h - bbox["b"])
-        return (bbox["l"], bbox["t"], bbox["r"], bbox["b"])
-
     def _location_tokens(self, item: dict) -> str:
         prov = item.get("prov") or []
         if not prov:
@@ -236,7 +231,7 @@ class DocLangSerializer(DocSerializer):
             page_w, page_h = self._page_size(pr.get("page_no"))
             out.append(
                 location_tokens_for_bbox(
-                    self._bbox_tl_tuple(pr["bbox"], page_h), page_w, page_h, p.xsize, p.ysize
+                    to_top_left_tuple(pr["bbox"], page_h), page_w, page_h, p.xsize, p.ysize
                 )
             )
         if len(out) > 1:
@@ -743,7 +738,7 @@ class DocLangSerializer(DocSerializer):
                 for it, _ in self.doc.iterate_items_cached(root=item):
                     for pr in it.get("prov", ()):
                         page_w, page_h = self._page_size(pr.get("page_no"))
-                        boxes.append(self._bbox_tl_tuple(pr["bbox"], page_h))
+                        boxes.append(to_top_left_tuple(pr["bbox"], page_h))
                         page_ctx = (page_w, page_h)
                 if boxes and page_ctx:
                     bbox = (
@@ -848,7 +843,7 @@ class DocLangSerializer(DocSerializer):
                 cell_loc = ""
                 if need_cell_loc and cell.get("bbox"):
                     cell_loc = location_tokens_for_bbox(
-                        self._bbox_tl_tuple(cell["bbox"], page_h), page_w, page_h, p.xsize, p.ysize
+                        to_top_left_tuple(cell["bbox"], page_h), page_w, page_h, p.xsize, p.ysize
                     )
                 if rowstart == i and colstart == j:
                     origin = self._otsl_origin(cell, i, j, row_start, col_start, bool(content))

@@ -12,6 +12,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional
 
+from docling_core_spark.functions.geometry import is_topleft, to_top_left_tuple
 from docling_core_spark.functions.serializers import (
     DocSerializer,
     MarkdownParams,
@@ -79,25 +80,11 @@ def loc_token(val: float, rnorm: int = 500, self_closing: bool = False) -> str:
     return f"<loc_{v}{'/' if self_closing else ''}>"
 
 
-def _bbox_as_tuple(bbox: dict) -> tuple:
-    # reference base.py:124-129: BOTTOMLEFT tuples swap t/b
-    if bbox.get("coord_origin", "TOPLEFT").upper() == "BOTTOMLEFT":
-        return (bbox["l"], bbox["b"], bbox["r"], bbox["t"])
-    return (bbox["l"], bbox["t"], bbox["r"], bbox["b"])
-
-
-def to_top_left_tuple(bbox: dict, page_h: float) -> tuple:
-    """Bbox as (l,t,r,b) in top-left origin."""
-    if bbox.get("coord_origin", "TOPLEFT").upper() == "BOTTOMLEFT":
-        return (bbox["l"], page_h - bbox["t"], bbox["r"], page_h - bbox["b"])
-    return (bbox["l"], bbox["t"], bbox["r"], bbox["b"])
-
-
 def to_bottom_left_tuple(bbox: dict, page_h: float) -> tuple:
     """Bbox as BOTTOMLEFT as_tuple — (l, b, r, t) per reference base.py:128."""
-    if bbox.get("coord_origin", "TOPLEFT").upper() == "BOTTOMLEFT":
-        return _bbox_as_tuple(bbox)
-    return (bbox["l"], page_h - bbox["b"], bbox["r"], page_h - bbox["t"])
+    if is_topleft(bbox):
+        return (bbox["l"], page_h - bbox["b"], bbox["r"], page_h - bbox["t"])
+    return (bbox["l"], bbox["b"], bbox["r"], bbox["t"])
 
 
 def location_str(

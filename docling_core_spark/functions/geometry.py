@@ -31,14 +31,23 @@ def area(bb: dict) -> float:
     return width(bb) * height(bb)
 
 
-def _is_topleft(bb: dict) -> bool:
-    return bb.get("coord_origin", "TOPLEFT").upper() == "TOPLEFT"
+def is_topleft(bb: dict) -> bool:
+    """Whether ``bb`` has top-left origin; a missing or null
+    ``coord_origin`` means top-left, the schema default."""
+    return (bb.get("coord_origin") or "TOPLEFT").upper() != "BOTTOMLEFT"
+
+
+def to_top_left_tuple(bb: dict, page_h: float) -> tuple[float, float, float, float]:
+    """(l, t, r, b) in top-left origin (reference BoundingBox.to_top_left_origin)."""
+    if is_topleft(bb):
+        return (bb["l"], bb["t"], bb["r"], bb["b"])
+    return (bb["l"], page_h - bb["t"], bb["r"], page_h - bb["b"])
 
 
 def intersection_area(a: dict, b: dict) -> float:
     """Intersection area (reference base.py:161-197)."""
     left, right = max(a["l"], b["l"]), min(a["r"], b["r"])
-    if _is_topleft(a):
+    if is_topleft(a):
         bottom, top = max(a["t"], b["t"]), min(a["b"], b["b"])
     else:
         top, bottom = min(a["t"], b["t"]), max(a["b"], b["b"])
@@ -63,7 +72,7 @@ def intersection_over_self(a: dict, b: dict) -> float:
 def intersection_bbox(a: dict, b: dict) -> Optional[dict]:
     """Intersection bbox or None when disjoint."""
     left, right = max(a["l"], b["l"]), min(a["r"], b["r"])
-    if _is_topleft(a):
+    if is_topleft(a):
         top, bottom = max(a["t"], b["t"]), min(a["b"], b["b"])
         if right <= left or bottom <= top:
             return None
@@ -78,7 +87,7 @@ def enclosing_bbox(boxes: Sequence[dict]) -> Optional[dict]:
     """Smallest bbox covering all boxes (same origin assumed)."""
     if not boxes:
         return None
-    tl = _is_topleft(boxes[0])
+    tl = is_topleft(boxes[0])
     return {
         "l": min(b["l"] for b in boxes),
         "r": max(b["r"] for b in boxes),

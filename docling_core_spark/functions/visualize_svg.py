@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from typing import Iterator, Optional
 
+from docling_core_spark.functions.geometry import is_topleft, to_top_left_tuple
 from docling_core_spark.model.doc import Doc
 
 # reference labels.py DocItemLabel.get_color (types/doc/labels.py:50-84)
@@ -66,14 +67,6 @@ def _fmt(v: float) -> str:
     """Deterministic short number format."""
     s = f"{v:.2f}"
     return s.rstrip("0").rstrip(".") if "." in s else s
-
-
-def _tl_tuple(bbox: dict, page_h: float) -> tuple[float, float, float, float]:
-    """(l, t, r, b) in top-left origin (reference BoundingBox.to_top_left_origin)."""
-    l, t, r, b = bbox["l"], bbox["t"], bbox["r"], bbox["b"]
-    if bbox.get("coord_origin", "TOPLEFT").upper() == "BOTTOMLEFT":
-        t, b = page_h - t, page_h - b
-    return l, t, r, b
 
 
 def _rect(x0, y0, x1, y1, rgb, fill_alpha, stroke_alpha=255, cls="") -> str:
@@ -139,7 +132,7 @@ def layout_svg(
             if page_nr not in pages:
                 continue
             size = pages[page_nr]["size"]
-            x0, y0, x1, y1 = _tl_tuple(prov["bbox"], size["height"])
+            x0, y0, x1, y1 = to_top_left_tuple(prov["bbox"], size["height"])
             label = item.get("label", "text")
             rgb = LABEL_COLORS.get(label, (0, 0, 0))
             cls = f"cluster {label}"
@@ -207,7 +200,7 @@ def reading_order_svg(
             if prev_page is None or page_nr != prev_page:
                 prev_page = page_nr
                 state.clear()
-            x0b, y0b, x1b, y1b = _tl_tuple(prov["bbox"], size["height"])
+            x0b, y0b, x1b, y1b = to_top_left_tuple(prov["bbox"], size["height"])
             # reference normalizes then rounds against the image size; in
             # page units the net effect is rounding the page coordinates
             l = round(x0b / size["width"] * size["width"])
@@ -275,7 +268,7 @@ def _cells(data: dict) -> list[dict]:
 
 def _enclosing(bboxes: list[dict]) -> dict:
     out = dict(bboxes[0])
-    tl = out.get("coord_origin", "TOPLEFT").upper() == "TOPLEFT"
+    tl = is_topleft(out)
     for bb in bboxes[1:]:
         out["l"] = min(out["l"], bb["l"])
         out["r"] = max(out["r"], bb["r"])
@@ -304,7 +297,7 @@ def _axis_bboxes(data: dict, axis: str, minimal: bool) -> dict[int, dict]:
         if not by_span:
             continue
         bbox = _enclosing(by_span[min(by_span)])
-        tl = bbox.get("coord_origin", "TOPLEFT").upper() == "TOPLEFT"
+        tl = is_topleft(bbox)
         for bbs in by_span.values():
             for bb in bbs:
                 if axis == "row":
@@ -325,7 +318,7 @@ def _axis_bboxes(data: dict, axis: str, minimal: bool) -> dict[int, dict]:
                 b["l"], b["r"] = gl, gr
         else:
             first = next(iter(out.values()))
-            if first.get("coord_origin", "TOPLEFT").upper() == "TOPLEFT":
+            if is_topleft(first):
                 gt = min(b["t"] for b in out.values())
                 gb = max(b["b"] for b in out.values())
             else:
@@ -392,19 +385,19 @@ def table_svg(
                 if cell.get("row_section"):
                     kind = "row_section"
                 rgb, fa, sa = _TBL[kind]
-                x0, y0, x1, y1 = _tl_tuple(bb, page_h)
+                x0, y0, x1, y1 = to_top_left_tuple(bb, page_h)
                 per_page[page_nr].append(
                     _rect(x0, y0, x1, y1, rgb, fa, sa, f"cell {kind}")
                 )
         if show_rows:
             for _, bb in sorted(row_bounding_boxes(data, minimal_row_bboxes).items()):
                 rgb, fa, sa = _TBL["row"]
-                x0, y0, x1, y1 = _tl_tuple(bb, page_h)
+                x0, y0, x1, y1 = to_top_left_tuple(bb, page_h)
                 per_page[page_nr].append(_rect(x0, y0, x1, y1, rgb, fa, sa, "row"))
         if show_cols:
             for _, bb in sorted(column_bounding_boxes(data, minimal_col_bboxes).items()):
                 rgb, fa, sa = _TBL["col"]
-                x0, y0, x1, y1 = _tl_tuple(bb, page_h)
+                x0, y0, x1, y1 = to_top_left_tuple(bb, page_h)
                 per_page[page_nr].append(_rect(x0, y0, x1, y1, rgb, fa, sa, "col"))
     return {
         nr: _svg(pages[nr]["size"]["width"], pages[nr]["size"]["height"], body)
@@ -436,7 +429,7 @@ def key_value_svg(doc: Doc, show_label: bool = True, show_cell_id: bool = False)
             page_nr = prov["page_no"]
             page_h = pages[page_nr]["size"]["height"]
             rgb, fa = _KEY_FILL if cell.get("label") == "key" else _VALUE_FILL
-            x0, y0, x1, y1 = _tl_tuple(prov["bbox"], page_h)
+            x0, y0, x1, y1 = to_top_left_tuple(prov["bbox"], page_h)
             per_page[page_nr].append(
                 _rect(x0, y0, x1, y1, rgb, fa, 255, f"kv {cell.get('label')}")
             )
@@ -469,7 +462,7 @@ def key_value_svg(doc: Doc, show_label: bool = True, show_cell_id: bool = False)
             page_h = pages[page_nr]["size"]["height"]
 
             def centre(bb):
-                l, t, r, b = _tl_tuple(bb, page_h)
+                l, t, r, b = to_top_left_tuple(bb, page_h)
                 return (l + r) / 2, (t + b) / 2
 
             sx, sy = centre(sp["bbox"])

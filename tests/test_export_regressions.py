@@ -53,3 +53,36 @@ def test_export_after_content_layer_edit_drops_the_item():
     assert export_to_markdown(doc) == "keep"
     assert export_to_text(doc) == "keep"
 
+
+def _boxed_doc(origin):
+    doc = Doc(name="boxes")
+    doc.add_page(1, 200.0, 100.0)
+    doc.add_text("text", "boxed", prov=[{"page_no": 1, "bbox": _bbox(10, 20, 90, 40, origin),
+                                          "charspan": [0, 5]}])
+    cell = {**_cell("c", 0, 0), "bbox": _bbox(12, 50, 30, 60, origin)}
+    doc.add_table({"num_rows": 1, "num_cols": 1, "table_cells": [cell]},
+                  prov=[{"page_no": 1, "bbox": _bbox(10, 50, 90, 70, origin), "charspan": [0, 0]}])
+    return doc
+
+
+def test_null_coord_origin_means_top_left_in_every_format():
+    """``coord_origin: null`` reads as top-left, the schema default, in every
+    format that places boxes; doctags, azure and svg used to raise
+    AttributeError on it while doclang already read it as top-left."""
+    from docling_core_spark.functions.azure_out import export_to_azure
+    from docling_core_spark.functions.doctags import export_to_doctags
+    from docling_core_spark.functions.visualize_svg import visualize_doc_svg
+
+    for export in (export_to_doctags, export_to_doclang, export_to_azure, visualize_doc_svg):
+        assert export(_boxed_doc(None)) == export(_boxed_doc("TOPLEFT")), export.__name__
+    assert export_to_doctags(_boxed_doc("BOTTOMLEFT")) != export_to_doctags(_boxed_doc(None))
+
+
+def test_null_coord_origin_geometry():
+    from docling_core_spark.functions import geometry as G
+
+    a, b = _bbox(0, 0, 10, 10, None), _bbox(5, 5, 15, 15, None)
+    assert G.is_topleft(a) and not G.is_topleft(_bbox(0, 10, 10, 0, "BOTTOMLEFT"))
+    assert G.intersection_area(a, b) == 25
+    assert G.to_top_left_tuple(_bbox(1, 90, 3, 80, "BOTTOMLEFT"), 100.0) == (1, 10, 3, 20)
+    assert G.to_top_left_tuple(a, 100.0) == (0, 0, 10, 10)
