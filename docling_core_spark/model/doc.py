@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 from contextlib import contextmanager
 from functools import lru_cache
-from typing import Any, Callable, Iterable, Iterator, Optional
+from typing import Any, Callable, Iterator, Optional
 
 CURRENT_VERSION = "1.10.0"  # reference common/constants.py:7
 
@@ -260,11 +260,6 @@ def _round_export_floats(obj, coord_p: Optional[int], confid_p: Optional[int]) -
             _round_export_floats(v, coord_p, confid_p)
 
 
-def ref_of(item: dict) -> str:
-    """Return the item's self reference string."""
-    return item["self_ref"]
-
-
 @lru_cache(maxsize=65536)
 def ref_array(cref: str) -> str:
     """Array name of a `#/<array>/<idx>` or `#/<name>` pointer."""
@@ -317,11 +312,6 @@ def content_layer(item: dict) -> str:
     if cl is None:
         return FURNITURE if item["self_ref"] == "#/furniture" else BODY
     return cl
-
-
-def item_label(item: dict) -> Optional[str]:
-    """DocItem label (None for groups without label)."""
-    return item.get("label")
 
 
 class Doc:

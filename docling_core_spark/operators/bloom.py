@@ -146,40 +146,6 @@ def _check_filter(filt, m_bits: int) -> None:
         )
 
 
-def bloom_probe_flags(
-    paras: DataFrame, filter_bytes, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
-) -> DataFrame:
-    """(doc_id, seen int): per-paragraph membership against the broadcast
-    filter — map-side, vectorized bit test per Arrow batch."""
-    _check_filter(filter_bytes, m_bits)
-    bc = _as_broadcast(paras, filter_bytes)
-    with_pos = paras.select(
-        "doc_id", _positions(F.col("para"), m_bits, k).alias("pos")
-    )
-
-    def probe(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            pos = rb.column(rb.schema.get_field_index("pos"))
-            # fixed-width lists: one contiguous values buffer -> (n, k)
-            mat = np.asarray(pos.flatten(), dtype=np.int64).reshape(n, k)
-            seen = ((bits[mat >> 3] >> (mat & 7).astype(np.uint8)) & 1).all(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("doc_id")),
-                    pa.array(seen.astype(np.int32)),
-                ],
-                names=["doc_id", "seen"],
-            )
-
-    return with_pos.mapInArrow(probe, "doc_id long, seen int")
-
-
 def bloom_flag_docs(
     docs: DataFrame,
     filter_bytes,

@@ -4,11 +4,10 @@ chunks, per-doc profile — the T3/T4/C7/A1 operators over doc_json columns.
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -19,7 +18,7 @@ from pyspark.sql.types import (
 
 from docling_core_spark.functions.chunkers import page_chunks, profile_doc
 from docling_core_spark.model.doc import Doc
-from docling_core_spark.model.transform import concatenate, filter_pages
+from docling_core_spark.model.transform import concatenate
 
 CONCAT_SCHEMA = StructType(
     [
@@ -51,27 +50,6 @@ def concatenate_docs(docs: DataFrame, group_col: str, doc_json_col: str = "doc_j
         )
 
     return docs.groupBy(group_col).applyInPandas(merge, schema=CONCAT_SCHEMA)
-
-
-def filter_doc_pages(docs: DataFrame, page_nrs: set[int], doc_json_col: str = "doc_json") -> DataFrame:
-    """Per-row page projection (reference filter, T3)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, dj in zip(pdf["url"], pdf[doc_json_col]):
-                try:
-                    doc = Doc.from_json(dj)
-                    available = {int(k) for k in doc.pages}
-                    wanted = page_nrs & available
-                    filtered = filter_pages(doc, page_nrs=wanted) if wanted else None
-                    out.append({"url": url, "doc_json": filtered.to_json() if filtered else None})
-                except Exception as err:  # noqa: BLE001
-                    out.append({"url": url, "doc_json": None})
-            yield pd.DataFrame(out, columns=["url", "doc_json"])
-
-    schema = StructType([StructField("url", StringType()), StructField("doc_json", StringType())])
-    return docs.select("url", doc_json_col).mapInPandas(run, schema=schema)
 
 
 PAGE_CHUNK_SCHEMA = StructType(

@@ -46,16 +46,3 @@ def prune_scan(pages: DataFrame, langs: Optional[list[str]] = None,
     if ts_to:
         out = out.filter(F.col("warc_ts") < F.lit(ts_to).cast("timestamp"))
     return out
-
-
-def write_output(df: DataFrame, table_or_path: str, partition_by: Optional[list[str]] = None) -> None:
-    """Write results (Iceberg table with dynamic partition overwrite, or parquet)."""
-    spark = df.sparkSession
-    if iceberg_available(spark) and "/" not in table_or_path:
-        writer = df.writeTo(table_or_path).using("iceberg")
-        writer.createOrReplace()
-        return
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(table_or_path)

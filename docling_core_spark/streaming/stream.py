@@ -8,11 +8,9 @@ handling.
 
 from __future__ import annotations
 
-from typing import Callable, Optional
-
 import pandas as pd  # module scope: pandas_udf resolves "pd.Series" hints here
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.extract import extract_pages, split_skew
 
@@ -135,27 +133,6 @@ def stateful_exact_dedup(
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def rate_test_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic streaming web_pages source for tests (rate source -> pages)."""
-    from docling_core_spark.sources.web_pages import synth_html
-
-    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-
-    @F.pandas_udf("string")
-    def gen_html(values: "pd.Series") -> "pd.Series":
-        return values.map(
-            lambda v: synth_html(int(v), f"stream doc {int(v)} body text", "en")
-        )
-
-    return rate.select(
-        F.concat(F.lit("https://example.org/stream/"), F.col("value")).alias("url"),
-        F.col("timestamp").alias("warc_ts"),
-        F.encode(gen_html("value"), "utf-8").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
     )
 
 

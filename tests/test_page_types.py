@@ -217,3 +217,15 @@ def test_parsed_pdf_document_roundtrip(tmp_path):
     loaded = ParsedPdfDocument.load_from_json(f)
     assert list(dict(loaded.iterate_pages())) == [1]
     assert loaded.table_of_contents["children"][0]["text"] == "Sec 1.1"
+
+
+def test_page_geometry_origin():
+    """PdfPageGeometry.origin (reference page.py:541-629): (l, b) of the
+    crop box when there is one, else of the page rect."""
+    from docling_core_spark.model.page import geometry_origin, page_geometry
+
+    rect = rect_from_bbox({"l": 1, "b": 2, "r": 100, "t": 200, "coord_origin": "BOTTOMLEFT"})
+    crop = {"l": 5, "b": 7, "r": 95, "t": 190, "coord_origin": "BOTTOMLEFT"}
+    assert geometry_origin(pdf_page_geometry(0.0, rect, crop_bbox=crop)) == (5, 7)
+    assert geometry_origin(pdf_page_geometry(0.0, rect)) == (1, 2)
+    assert geometry_origin(page_geometry(0.0, rect)) == (1, 2)

@@ -77,3 +77,17 @@ def test_upgrade_content_layer_from_1_0_0():
     assert doc.version == CURRENT_VERSION
     assert doc.texts[0]["label"] == "page_header"
     assert doc.texts[0]["content_layer"] == "furniture"
+
+
+def test_yaml_roundtrip_builder_doc():
+    """S3: ``to_yaml`` / ``from_yaml`` round-trip a builder-made document."""
+    from docling_core_spark.functions.serializers import export_to_markdown
+
+    doc = Doc(name="y")
+    doc.add_title("Title")
+    doc.add_text("text", "body ü")
+    text = doc.to_yaml()
+    assert "body ü" in text
+    back = Doc.from_yaml(text)
+    assert back.to_dict() == doc.to_dict()
+    assert export_to_markdown(back) == "# Title\n\nbody ü"
