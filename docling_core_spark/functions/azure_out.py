@@ -66,7 +66,7 @@ class AzureSerializer(DocSerializer):
         return page_no, _polygon(*self._top_left(prov["bbox"], self._page_height(page_no)))
 
     def _page_height(self, page_no) -> Optional[float]:
-        page = self.doc.pages.get(str(page_no)) or self.doc.pages.get(page_no)
+        page = self.doc.page(page_no)
         return (page.get("size") or {}).get("height") if page else None
 
     @staticmethod

@@ -230,7 +230,7 @@ def profile_doc(doc: Doc, bitmap_coverage_threshold: float = 0.05) -> dict:
             continue
         bbox = prov.get("bbox") or {}
         area = abs(bbox.get("r", 0) - bbox.get("l", 0)) * abs(bbox.get("b", 0) - bbox.get("t", 0))
-        page = doc.pages.get(str(prov.get("page_no"))) or doc.pages.get(prov.get("page_no"))
+        page = doc.page(prov.get("page_no"))
         if page:
             size = page.get("size") or {}
             page_area = size.get("width", 0) * size.get("height", 0)

@@ -217,8 +217,7 @@ class DocLangSerializer(DocSerializer):
         return self._thread_ids[sr]
 
     def _page_size(self, page_no) -> tuple[float, float]:
-        page = self.doc.pages.get(page_no) or self.doc.pages.get(str(page_no)) or {}
-        size = page.get("size") or {}
+        size = (self.doc.page(page_no) or {}).get("size") or {}
         return size.get("width", 1.0), size.get("height", 1.0)
 
     def _location_tokens(self, item: dict) -> str:
@@ -823,9 +822,7 @@ class DocLangSerializer(DocSerializer):
         if p.add_table_cell_location and item.get("prov"):
             page_no = item["prov"][0].get("page_no")
             page_w, page_h = self._page_size(page_no)
-            need_cell_loc = page_w > 0 and page_h > 0 and bool(
-                self.doc.pages.get(page_no) or self.doc.pages.get(str(page_no))
-            )
+            need_cell_loc = page_w > 0 and page_h > 0 and bool(self.doc.page(page_no))
 
         parts: list[str] = []
         for i in range(row_start, row_end):

@@ -154,7 +154,7 @@ class DocTagsSerializer(DocSerializer):
         return text
 
     def _page_dims(self, page_no: int) -> Optional[tuple]:
-        page = self.doc.pages.get(str(page_no)) or self.doc.pages.get(page_no)
+        page = self.doc.page(page_no)
         if not page:
             return None
         size = page.get("size") or {}

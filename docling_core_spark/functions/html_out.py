@@ -574,7 +574,7 @@ class HTMLSerializer(DocSerializer):
             for page_no, page in pages.items():
                 html_parts.append("<tr>")
                 html_parts.append("<td>")
-                page_img = (self.doc.pages.get(str(page_no)) or {}).get("image") or {}
+                page_img = (self.doc.page(page_no) or {}).get("image") or {}
                 uri = page_img.get("uri")
                 if isinstance(uri, str) and uri.startswith("data:"):
                     html_parts.append(f'<figure><img src="{uri}"></figure>')

@@ -988,6 +988,11 @@ class Doc:
         self.pages[str(page_no)] = page
         return page
 
+    def page(self, page_no) -> Optional[dict]:
+        """The page numbered ``page_no``, or None.  ``pages`` is keyed by
+        str after JSON or :meth:`add_page`, by int in hand-built docs."""
+        return self.pages.get(str(page_no)) or self.pages.get(page_no)
+
     # ------------------------------------------------------------------
     # Traversal (reference document.py:3235-3313)
     # ------------------------------------------------------------------

@@ -86,3 +86,12 @@ def test_null_coord_origin_geometry():
     assert G.intersection_area(a, b) == 25
     assert G.to_top_left_tuple(_bbox(1, 90, 3, 80, "BOTTOMLEFT"), 100.0) == (1, 10, 3, 20)
     assert G.to_top_left_tuple(a, 100.0) == (0, 0, 10, 10)
+
+
+def test_page_lookup_takes_str_and_int_keys():
+    doc = Doc(name="p")
+    page = doc.add_page(1, 10.0, 20.0)
+    assert doc.page(1) is page and doc.page("1") is page
+    doc.pages = {2: page}
+    assert doc.page(2) is page
+    assert doc.page(3) is None
