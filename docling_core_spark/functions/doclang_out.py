@@ -25,7 +25,6 @@ Scope notes vs the reference:
 
 from __future__ import annotations
 
-import copy
 import re
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field, replace
@@ -504,13 +503,9 @@ class DocLangSerializer(DocSerializer):
             thread_id = self.allocate_thread_id(item)
             frags = []
             for pr in prov:
-                frag = copy.deepcopy(item)
-                frag["prov"] = [pr]
                 span = pr.get("charspan") or (0, len(item.get("orig") or ""))
                 orig = (item.get("orig") or "")[span[0] : span[1]]
-                frag["text"] = orig
-                frag["orig"] = orig
-                frag["prov"][0]["charspan"] = [0, len(orig)]
+                frag = {**item, "prov": [{**pr, "charspan": [0, len(orig)]}], "text": orig, "orig": orig}
                 frags.append(self._serialize_single_text(frag, visited, is_inline_scope, thread_id))
             out = []
             for i, frag_res in enumerate(frags):
@@ -808,11 +803,9 @@ class DocLangSerializer(DocSerializer):
         data = item.get("data") or {}
         if not data.get("table_cells"):
             return ""
-        # always rebuild: a loaded document's dumped grid loses RichTableCell
-        # refs (the reference dumps grid cells as plain TableCell) while its
-        # in-memory grid keeps them — serialization uses the in-memory form
-        self.doc._normalize_table_data(data)
-        grid = data.get("grid") or []
+        # built from table_cells, never a loaded ``grid``: the dumped grid
+        # loses RichTableCell refs (the reference dumps plain TableCells)
+        grid = self._grid_c(data)
         nrows, ncols = data.get("num_rows", 0), data.get("num_cols", 0)
         row_end = nrows if row_end is None else row_end
         col_end = ncols if col_end is None else col_end
@@ -907,10 +900,8 @@ class DocLangSerializer(DocSerializer):
                 else:
                     r0, r1 = idp * nrows // nprov, (idp + 1) * nrows // nprov
                     c0, c1 = 0, ncols
-                frag = copy.deepcopy(item)
-                frag["prov"] = [pr]
                 tres = self._serialize_single_table(
-                    frag, thread_id=thread_id, include_caption_head=idp == 0,
+                    {**item, "prov": [pr]}, thread_id=thread_id, include_caption_head=idp == 0,
                     row_start=r0, row_end=r1, col_start=c0, col_end=c1,
                 )
                 if idp > 0 and prov[idp - 1]["page_no"] != pr["page_no"]:

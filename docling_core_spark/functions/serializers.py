@@ -522,33 +522,14 @@ class DocSerializer:
 
     # -- tables ------------------------------------------------------------
 
-    @staticmethod
-    def _grid(data: dict) -> list[list[dict]]:
-        """Dense grid from span-typed cells (reference table_data.py:101-142)."""
-        num_rows = data.get("num_rows", 0)
-        num_cols = data.get("num_cols", 0)
-        grid = [[{"text": ""} for _ in range(num_cols)] for _ in range(num_rows)]
-        for cell in data.get("table_cells", ()):
-            for i in range(
-                min(cell.get("start_row_offset_idx", 0), num_rows),
-                min(cell.get("end_row_offset_idx", 0), num_rows),
-            ):
-                for j in range(
-                    min(cell.get("start_col_offset_idx", 0), num_cols),
-                    min(cell.get("end_col_offset_idx", 0), num_cols),
-                ):
-                    grid[i][j] = cell
-            # cells outside bounds are clipped, matching the reference
-        return grid
-
     def _grid_c(self, data: dict) -> list[list[dict]]:
-        """:meth:`_grid`, built once per table in a :meth:`Doc.read_scope`.
+        """:func:`M.table_grid`, built once per table in a :meth:`Doc.read_scope`.
         Keyed by the data dict's identity; the entry pins the dict so its id
         cannot be recycled while the scope lasts.  Callers never mutate the
         shared grid (cells are the original dicts)."""
         if not data:
             return []
-        return self.doc.memoized(("grid", id(data)), lambda: (data, self._grid(data)))[1]
+        return self.doc.memoized(("grid", id(data)), lambda: (data, M.table_grid(data)))[1]
 
     def _cell_text(self, cell: dict, visited: Optional[set] = None) -> str:
         """Resolve a cell's text; RichTableCells flatten their subtree."""

@@ -260,6 +260,102 @@ def _round_export_floats(obj, coord_p: Optional[int], confid_p: Optional[int]) -
             _round_export_floats(v, coord_p, confid_p)
 
 
+# TableCell pydantic defaults, in field order: the dump always carries them
+_CELL_DEFAULTS = {
+    "row_span": 1, "col_span": 1, "column_header": False, "row_header": False,
+    "row_section": False, "fillable": False,
+}
+
+
+def table_grid(data: dict) -> list[list[dict]]:
+    """Dense ``num_rows`` x ``num_cols`` grid of a table's cells (the
+    reference's computed ``TableData.grid``, table_data.py:101-142).
+
+    A spanning cell fills every slot it covers, as the same dict; a slot no
+    cell covers gets an empty default cell.  Offsets past the table are
+    clipped and missing offsets read as 0.  ``data`` is not changed."""
+    num_rows = data.get("num_rows", 0)
+    num_cols = data.get("num_cols", 0)
+    grid: list[list[Any]] = [[None] * num_cols for _ in range(num_rows)]
+    for cell in data.get("table_cells", ()):
+        rows = range(min(cell.get("start_row_offset_idx", 0), num_rows),
+                     min(cell.get("end_row_offset_idx", 0), num_rows))
+        cols = range(min(cell.get("start_col_offset_idx", 0), num_cols),
+                     min(cell.get("end_col_offset_idx", 0), num_cols))
+        for i in rows:
+            for j in cols:
+                grid[i][j] = cell
+    for i, row in enumerate(grid):
+        for j, cell in enumerate(row):
+            if cell is None:
+                row[j] = {
+                    "row_span": 1, "col_span": 1,
+                    "start_row_offset_idx": i, "end_row_offset_idx": i + 1,
+                    "start_col_offset_idx": j, "end_col_offset_idx": j + 1,
+                    "text": "",
+                    "column_header": False, "row_header": False, "row_section": False, "fillable": False,
+                }
+    return grid
+
+
+def _dump_table_data(data: dict) -> dict:
+    """A copy of ``data`` as the reference dumps it: cell defaults filled,
+    ``orientation`` and the computed ``grid`` added.  Grid cells are plain
+    TableCells: a RichTableCell's ``ref`` shows in ``table_cells`` only."""
+    out = {**data}
+    if "table_cells" in data:
+        out["table_cells"] = [{**c, **_CELL_DEFAULTS, **c} for c in data["table_cells"]]
+    out.setdefault("orientation", "rot_0")
+    grid = table_grid(out)
+    if any("ref" in c for c in out.get("table_cells", ())):
+        grid = [[{k: v for k, v in c.items() if k != "ref"} for c in row] for row in grid]
+    out["grid"] = grid
+    return out
+
+
+def _dump_table(tbl: dict) -> dict:
+    out = {**tbl}
+    out.setdefault("annotations", [])
+    if tbl.get("data"):
+        out["data"] = _dump_table_data(tbl["data"])
+    return out
+
+
+def _dump_picture(pic: dict) -> dict:
+    """``pic``, or a copy whose chart data is dumped like table data."""
+    meta = pic.get("meta") or {}
+    tabular = meta.get("tabular_chart") or {}
+    anns = pic.get("annotations") or ()
+    if not tabular.get("chart_data") and not any(a.get("chart_data") for a in anns):
+        return pic
+    pic = {**pic}
+    if tabular.get("chart_data"):
+        chart = _dump_table_data(tabular["chart_data"])
+        pic["meta"] = {**meta, "tabular_chart": {**tabular, "chart_data": chart}}
+    if anns:
+        pic["annotations"] = [
+            {**a, "chart_data": _dump_table_data(a["chart_data"])} if a.get("chart_data") else a for a in anns
+        ]
+    return pic
+
+
+def _dump_text(t: dict) -> dict:
+    fmt = t.get("formatting")
+    if fmt is None:
+        return t
+    # pydantic dump parity: Formatting always dumps all defaults
+    return {
+        **t,
+        "formatting": {
+            "bold": fmt.get("bold", False),
+            "italic": fmt.get("italic", False),
+            "underline": fmt.get("underline", False),
+            "strikethrough": fmt.get("strikethrough", False),
+            "script": fmt.get("script", "baseline"),
+        },
+    }
+
+
 @lru_cache(maxsize=65536)
 def ref_array(cref: str) -> str:
     """Array name of a `#/<array>/<idx>` or `#/<name>` pointer."""
@@ -1231,46 +1327,6 @@ class Doc:
         """Parse from a DoclingDocument JSON string."""
         return cls.from_dict(json.loads(s))
 
-    def _normalize_table_data(self, data: dict) -> None:
-        """Fill pydantic-dump defaults + the computed dense grid in place
-        (reference export includes TableData.grid as a computed field)."""
-        data.setdefault("orientation", "rot_0")
-        num_rows = data.get("num_rows", 0)
-        num_cols = data.get("num_cols", 0)
-        for cell in data.get("table_cells", ()):
-            cell.setdefault("row_span", 1)
-            cell.setdefault("col_span", 1)
-            cell.setdefault("column_header", False)
-            cell.setdefault("row_header", False)
-            cell.setdefault("row_section", False)
-            cell.setdefault("fillable", False)
-        grid = [
-            [
-                {
-                    "row_span": 1,
-                    "col_span": 1,
-                    "start_row_offset_idx": i,
-                    "end_row_offset_idx": i + 1,
-                    "start_col_offset_idx": j,
-                    "end_col_offset_idx": j + 1,
-                    "text": "",
-                    "column_header": False,
-                    "row_header": False,
-                    "row_section": False,
-                    "fillable": False,
-                }
-                for j in range(num_cols)
-            ]
-            for i in range(num_rows)
-        ]
-        for cell in data.get("table_cells", ()):
-            for i in range(min(cell["start_row_offset_idx"], num_rows), min(cell["end_row_offset_idx"], num_rows)):
-                for j in range(
-                    min(cell["start_col_offset_idx"], num_cols), min(cell["end_col_offset_idx"], num_cols)
-                ):
-                    grid[i][j] = cell
-        data["grid"] = grid
-
     def to_dict(
         self,
         coord_precision: Optional[int] = None,
@@ -1281,27 +1337,11 @@ class Doc:
 
         coord_precision rounds bbox coordinates and sizes, confid_precision
         rounds confidence fields — plain round(), like the reference's
-        serialization-context field serializers (base.py:31-36)."""
-        for tbl in self.tables:
-            tbl.setdefault("annotations", [])
-            if tbl.get("data"):
-                data = tbl["data"]
-                self._normalize_table_data(data)
-                # the reference dumps computed-grid cells as plain TableCell:
-                # RichTableCell refs appear in table_cells but not in grid
-                if any("ref" in c for c in data.get("table_cells", ())):
-                    data["grid"] = [
-                        [{k: v for k, v in c.items() if k != "ref"} for c in row]
-                        for row in data["grid"]
-                    ]
-        for pic in self.pictures:
-            meta = pic.get("meta") or {}
-            chart = (meta.get("tabular_chart") or {}).get("chart_data")
-            if chart:
-                self._normalize_table_data(chart)
-            for ann in pic.get("annotations", ()):
-                if ann.get("chart_data"):
-                    self._normalize_table_data(ann["chart_data"])
+        serialization-context field serializers (base.py:31-36).
+
+        The doc is not changed: tables, texts with formatting and pictures
+        with chart data are dumped as copies, every other item as the doc's
+        own dict, so a caller that edits the result copies it first."""
         out: dict[str, Any] = {
             "schema_name": self.schema_name,
             "version": self.version,
@@ -1312,20 +1352,9 @@ class Doc:
         out["furniture"] = self.furniture
         out["body"] = self.body
         out["groups"] = self.groups
-        for t in self.texts:
-            fmt = t.get("formatting")
-            if fmt is not None:
-                # pydantic dump parity: Formatting always dumps all defaults
-                t["formatting"] = {
-                    "bold": fmt.get("bold", False),
-                    "italic": fmt.get("italic", False),
-                    "underline": fmt.get("underline", False),
-                    "strikethrough": fmt.get("strikethrough", False),
-                    "script": fmt.get("script", "baseline"),
-                }
-        out["texts"] = self.texts
-        out["pictures"] = self.pictures
-        out["tables"] = self.tables
+        out["texts"] = [_dump_text(t) for t in self.texts]
+        out["pictures"] = [_dump_picture(p) for p in self.pictures]
+        out["tables"] = [_dump_table(t) for t in self.tables]
         out["key_value_items"] = self.key_value_items
         out["form_items"] = self.form_items
         if self.field_regions:

@@ -97,8 +97,8 @@ def extract_row(
     doctags_out = None
     doclang_out = None
     tok = tokenizer if tokenizer is not None else RegexTokenizer(max_tokens)
-    # nothing mutates the doc until to_json below, so the formats and the
-    # chunker share one traversal per (root, flags) and one grid per table
+    # no exporter or chunker writes into the doc (tests/test_export_purity.py),
+    # so they share one traversal per (root, flags) and one grid per table
     with doc.read_scope():
         md = export_to_markdown(doc)
         txt = export_to_text(doc)

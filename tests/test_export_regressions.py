@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from docling_core_spark.functions.doclang_out import export_to_doclang
 from docling_core_spark.functions.serializers import export_to_markdown, export_to_text
 from docling_core_spark.model.doc import Doc
@@ -86,6 +88,16 @@ def test_null_coord_origin_geometry():
     assert G.intersection_area(a, b) == 25
     assert G.to_top_left_tuple(_bbox(1, 90, 3, 80, "BOTTOMLEFT"), 100.0) == (1, 10, 3, 20)
     assert G.to_top_left_tuple(a, 100.0) == (0, 0, 10, 10)
+
+
+def test_to_json_of_cell_without_offsets_dumps_it():
+    """A cell without offsets covers no grid slot; ``to_json`` used to raise
+    KeyError on it while the serializers already rendered the table."""
+    doc = Doc(name="t")
+    doc.add_table({"num_rows": 1, "num_cols": 1, "table_cells": [{"text": "loose"}]})
+    data = json.loads(doc.to_json())["tables"][0]["data"]
+    assert data["table_cells"][0]["text"] == "loose"
+    assert data["grid"][0][0]["text"] == ""
 
 
 def test_page_lookup_takes_str_and_int_keys():

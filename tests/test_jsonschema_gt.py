@@ -102,7 +102,7 @@ def test_spec_defaults_match_builder_behavior():
 def test_spec_table_cell_defaults_match_normalizer():
     from docling_core_spark.model.doc import Doc
 
-    # the pydantic defaults Doc._normalize_table_data materializes on cells
+    # the pydantic defaults Doc.to_dict fills in on table cells
     for field, expected in [
         ("row_span", 1),
         ("col_span", 1),
@@ -112,13 +112,14 @@ def test_spec_table_cell_defaults_match_normalizer():
         ("fillable", False),
     ]:
         assert _def_field_default("TableCell", field) == expected
-    data = {"num_rows": 1, "num_cols": 1, "table_cells": [{
+    doc = Doc("x")
+    doc.add_table({"num_rows": 1, "num_cols": 1, "table_cells": [{
         "start_row_offset_idx": 0, "end_row_offset_idx": 1,
-        "start_col_offset_idx": 0, "end_col_offset_idx": 1, "text": "t"}]}
-    Doc("x")._normalize_table_data(data)
-    cell = data["grid"][0][0]
-    for field in ("row_span", "col_span", "column_header", "row_header", "row_section", "fillable"):
-        assert cell[field] == _def_field_default("TableCell", field)
+        "start_col_offset_idx": 0, "end_col_offset_idx": 1, "text": "t"}]})
+    data = doc.to_dict()["tables"][0]["data"]
+    for cell in (data["table_cells"][0], data["grid"][0][0]):
+        for field in ("row_span", "col_span", "column_header", "row_header", "row_section", "fillable"):
+            assert cell[field] == _def_field_default("TableCell", field)
 
 
 def test_spec_ref_pattern_matches_model_refs():
