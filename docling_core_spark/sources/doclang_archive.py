@@ -92,7 +92,7 @@ def save_as_doclang_archive(doc: Doc, filename: Union[str, Path]) -> None:
 
     filename = Path(filename)
     assets: dict[str, bytes] = {}
-    doc = Doc.from_dict(doc.to_dict())  # private copy; rewrites stay local
+    doc = Doc.from_json(doc.to_json())  # private deep copy; rewrites stay local
 
     for idx, pic in enumerate(doc.pictures):
         image = pic.get("image")

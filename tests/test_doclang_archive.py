@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import base64
+import copy
 import json
 import zipfile
 from pathlib import Path
@@ -117,3 +119,18 @@ def test_image_size_headers():
     png = bytes.fromhex("89504e470d0a1a0a0000000d49484452") + (173).to_bytes(4, "big") + (178).to_bytes(4, "big")
     assert _image_size(png) == (173, 178)
     assert _image_size(b"\x00not an image") is None
+
+
+def test_save_leaves_callers_doc_unchanged(tmp_path):
+    png = bytes.fromhex("89504e470d0a1a0a0000000d49484452") + (2).to_bytes(4, "big") * 2
+    uri = "data:image/png;base64," + base64.b64encode(png).decode("ascii")
+    doc = Doc("pics")
+    doc.add_page(1, 100.0, 100.0)["image"] = {"mimetype": "image/png", "uri": uri}
+    doc.add_picture(image={"mimetype": "image/png", "size": {"width": 2, "height": 2}, "uri": uri})
+    before = copy.deepcopy(doc.to_dict())
+    save_as_doclang_archive(doc, tmp_path / "pics.dclx")
+    with zipfile.ZipFile(tmp_path / "pics.dclx") as archive:
+        assert any(n.startswith("assets/image_000000_") for n in archive.namelist())
+        assert "pages/1.png" in archive.namelist()
+    assert doc.pictures[0]["image"]["uri"] == uri
+    assert doc.to_dict() == before
