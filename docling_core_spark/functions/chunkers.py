@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import replace
-from typing import Any, Callable, Iterator, Optional
+from typing import Any, Iterator, Optional
 
 from docling_core_spark.functions.code_tree import _sha, chunker_class, code_meta
 from docling_core_spark.functions.serializers import (

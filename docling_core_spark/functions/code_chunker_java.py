@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from docling_core_spark.functions.code_tree import (
     Node,
-    Tok,
     TreeChunker,
     lex,
     skip_balanced,

@@ -7,7 +7,7 @@ Drafted by scripts/draft_schema_spec.py, then maintained by hand.
 """
 
 from docling_core_spark.model.schema_dsl import (
-    U, arr, const, dunion, enum, mapof, opt, raw, ref, t, tup,
+    U, arr, const, dunion, enum, mapof, opt, ref, t, tup,
 )
 
 

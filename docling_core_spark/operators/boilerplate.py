@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
-from typing import Iterator, Optional
+from typing import Iterator
 
 from docling_core_spark.functions.html_parse import FastTagParserMixin
 

@@ -34,7 +34,7 @@ identical integer arithmetic).
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable
 
 from pyspark.sql import DataFrame, functions as F
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import gzip
 import io
-from typing import Iterator, Optional
+from typing import Iterator
 
 __all__ = [
     "parse_sitemap",

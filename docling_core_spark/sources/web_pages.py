@@ -128,7 +128,6 @@ def web_pages_df(spark, sf_dir: str):
     rows, which is what makes the two-cluster-size scaling benchmark and the
     single-process oracle comparable.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         BinaryType,
         StringType,

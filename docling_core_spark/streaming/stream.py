@@ -88,8 +88,6 @@ def stateful_exact_dedup(
     is emitted.  This is the custom-stateful-operator pattern: the state
     store scales horizontally with the shuffle partitioning of the key.
     """
-    import hashlib
-
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
