@@ -32,7 +32,7 @@ context rule, no code copied):
 
 Everything is a pure function of the HTML string, shared verbatim by the
 Spark UDF and the single-process oracle.  Scale shape: map-only
-``mapInPandas`` over the pages table — no shuffle, no state; composes in
+``mapInArrow`` over the pages table — no shuffle, no state; composes in
 front of the quality/dedup stages exactly like text_clean.
 """
 
@@ -305,40 +305,40 @@ _SCHEMA = (
     "url string, n_paragraphs int, n_good int, n_chars int, "
     "n_chars_good int, main_text string"
 )
-_COLS = ["url", "n_paragraphs", "n_good", "n_chars", "n_chars_good", "main_text"]
 
 
 def main_content_df(pages, html_col: str = "html", url_col: str = "url", **thresholds):
     """DOM-heuristic boilerplate removal over the pages table.
 
-    Map-only ``mapInPandas`` (one fused stage, no shuffle): scales as a
+    Map-only ``mapInArrow`` (one fused stage, no shuffle): scales as a
     pure per-row transform; the scan prunes to (url, html) only.
     ``thresholds`` override the module constants — the synthetic corpus is
     stopword-sparse word salad, so its demo query opens the stopword gates
     and discriminates on link density + length + context (the round-5
     min_stopword_hits precedent); real-web runs keep the defaults."""
+    from docling_core_spark.operators.arrow_out import capped_batches, max_bytes_per_batch
+
+    max_bytes = max_bytes_per_batch(pages.sparkSession)
+
     def run(batches) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
 
-        # Arrow-native batch I/O (r9, the extract_pages pattern):
-        # to_pylist() materializes the two input columns in C and the
-        # result columns build straight into typed arrays — no pandas
-        # object-array intermediate around the fat html/main_text strings.
-        types = {
-            "url": pa.string(),
-            "n_paragraphs": pa.int32(),
-            "n_good": pa.int32(),
-            "n_chars": pa.int32(),
-            "n_chars_good": pa.int32(),
-            "main_text": pa.string(),
-        }
+        schema = pa.schema(
+            [
+                ("url", pa.string()),
+                ("n_paragraphs", pa.int32()),
+                ("n_good", pa.int32()),
+                ("n_chars", pa.int32()),
+                ("n_chars_good", pa.int32()),
+                ("main_text", pa.string()),
+            ]
+        )
+        # columns in through to_pylist(), out from Arrow buffers: no pandas
+        # in the worker (operators/arrow_out.py)
         for rb in batches:
-            urls = rb.column(0).to_pylist()
-            htmls = rb.column(1).to_pylist()
-            out = list(main_content_sql_rows(zip(urls, htmls), **thresholds))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[c] for r in out], type=types[c]) for c in _COLS],
-                names=_COLS,
+            rows = main_content_sql_rows(
+                zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()), **thresholds
             )
+            yield from capped_batches(schema, rows, max_bytes)
 
     return pages.select(url_col, html_col).mapInArrow(run, schema=_SCHEMA)

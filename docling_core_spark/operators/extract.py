@@ -18,10 +18,12 @@ Scale notes (100 TB / 10^12 rows):
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from docling_core_spark.operators.arrow_out import capped_batches, max_bytes_per_batch
 from docling_core_spark.operators.canon import canonical_order
 from pyspark.sql.types import (
     ArrayType,
@@ -171,6 +173,53 @@ def _error_row(
     }
 
 
+def extract_batches(
+    batches: Iterable["pa.RecordBatch"],
+    max_bytes: int,
+    max_tokens: int = 512,
+    bpe_merges: Optional[list] = None,
+    fault_url_substr: Optional[str] = None,
+    **flags,
+) -> Iterator["pa.RecordBatch"]:
+    """The Python-worker side of ``extract_pages``: (url, html, lang) input
+    batches -> EXTRACT_SCHEMA batches, rows in input order.
+
+    The input columns come out with ``to_pylist()`` and the output is built
+    from Arrow buffers (``arrow_out``): neither side goes through pandas, and
+    nothing here imports it.  Each input batch gives one output batch, or
+    more when its output strings pass ``max_bytes``, so the result rows a
+    worker holds at once carry less than ``max_bytes`` of strings plus one
+    row."""
+    out_schema = to_arrow_schema(EXTRACT_SCHEMA)
+    tokenizer = None
+    if bpe_merges is not None:
+        from docling_core_spark.operators.bpe import BPETokenizer
+
+        tokenizer = BPETokenizer(bpe_merges, max_tokens)
+
+    def rows(urls, htmls, langs) -> Iterator[dict]:
+        for url, html, lang in zip(urls, htmls, langs):
+            t0 = time.perf_counter()
+            try:
+                if fault_url_substr and fault_url_substr in url:
+                    raise RuntimeError("injected fault (chaos test)")
+                row = extract_row(
+                    url, html, lang, max_tokens=max_tokens, tokenizer=tokenizer, **flags
+                )
+            except Exception as err:  # noqa: BLE001 — per-row isolation by design
+                # failed rows keep their real elapsed time so time-spent
+                # lineage includes them
+                elapsed_us = int((time.perf_counter() - t0) * 1_000_000)
+                row = _error_row(url, lang, len(html or b""), err, elapsed_us)
+            yield row
+
+    for rb in batches:
+        urls, htmls, langs = (
+            rb.column(rb.schema.get_field_index(c)).to_pylist() for c in ("url", "html", "lang")
+        )
+        yield from capped_batches(out_schema, rows(urls, htmls, langs), max_bytes)
+
+
 def extract_pages(
     pages: DataFrame,
     chunker: str = "hybrid",
@@ -199,63 +248,23 @@ def extract_pages(
     never failed tasks — the html parser is total on garbage (fuzz-tested),
     so without injection the per-row isolation path is unreachable in tests.
     """
-    cols = ["url", "html", "lang"]
+    max_bytes = max_bytes_per_batch(pages.sparkSession)
 
     def run(batches) -> Iterator["pa.RecordBatch"]:
-        import time
+        return extract_batches(
+            batches,
+            max_bytes,
+            chunker=chunker,
+            max_tokens=max_tokens,
+            emit_doc_json=emit_doc_json,
+            emit_html=emit_html,
+            emit_doctags=emit_doctags,
+            emit_doclang=emit_doclang,
+            bpe_merges=bpe_merges,
+            fault_url_substr=_fault_url_substr,
+        )
 
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = to_arrow_schema(EXTRACT_SCHEMA)
-        tokenizer = None
-        if bpe_merges is not None:
-            from docling_core_spark.operators.bpe import BPETokenizer
-
-            tokenizer = BPETokenizer(bpe_merges, max_tokens)
-        for rb in batches:
-            # Arrow-native batch I/O (r9): to_pylist() materializes the
-            # columns in C, and the result columns build straight into
-            # typed Arrow arrays — no pandas object-array intermediate on
-            # either side of the fat string/struct columns (~5-10% of the
-            # full-format stage, interleaved A/B).
-            urls = rb.column(rb.schema.get_field_index("url")).to_pylist()
-            htmls = rb.column(rb.schema.get_field_index("html")).to_pylist()
-            langs = rb.column(rb.schema.get_field_index("lang")).to_pylist()
-            out = []
-            for url, html, lang in zip(urls, htmls, langs):
-                t0 = time.perf_counter()
-                try:
-                    if _fault_url_substr and _fault_url_substr in url:
-                        raise RuntimeError("injected fault (chaos test)")
-                    out.append(
-                        extract_row(
-                            url,
-                            html,
-                            lang,
-                            chunker=chunker,
-                            max_tokens=max_tokens,
-                            emit_doc_json=emit_doc_json,
-                            emit_html=emit_html,
-                            emit_doctags=emit_doctags,
-                            emit_doclang=emit_doclang,
-                            tokenizer=tokenizer,
-                        )
-                    )
-                except Exception as err:  # noqa: BLE001 — per-row isolation by design
-                    # failed rows keep their real elapsed time so time-spent
-                    # lineage includes them
-                    elapsed_us = int((time.perf_counter() - t0) * 1_000_000)
-                    out.append(_error_row(url, lang, len(html or b""), err, elapsed_us))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[f.name] for r in out], type=out_schema.field(i).type)
-                    for i, f in enumerate(EXTRACT_SCHEMA.fields)
-                ],
-                schema=out_schema,
-            )
-
-    return pages.select(*cols).mapInArrow(run, schema=EXTRACT_SCHEMA)
+    return pages.select("url", "html", "lang").mapInArrow(run, schema=EXTRACT_SCHEMA)
 
 
 def explode_chunks(docs: DataFrame) -> DataFrame:
