@@ -693,7 +693,15 @@ class TreeChunker:
 
     # -- imports ---------------------------------------------------------------
 
-    def build_imports(self, imports: dict[str, Node], func: Node, context: str) -> str:
+    def glob_imports(self, imports: dict[str, Node]) -> tuple[set, set]:
+        """Names of the imports that go into every chunk (a ``*`` in the
+        name), and their texts; computed once per file."""
+        names = {name for name in imports if "*" in name}
+        return names, {self.node_with_comments(imports[name]) for name in names}
+
+    def build_imports(
+        self, imports: dict[str, Node], globs: tuple[set, set], func: Node, context: str
+    ) -> str:
         used = {
             n for n in self.idents_in(func.start, func.end) if n in imports
         }
@@ -701,10 +709,7 @@ class TreeChunker:
             for name in imports:
                 if name in context:
                     used.add(name)
-        set_imports = set()
-        for name, node in imports.items():
-            if "*" in name:
-                set_imports.add(self.node_with_comments(node))
+        set_imports = set(globs[1])
         for u in used:
             set_imports.add(self.node_with_comments(imports[u]))
         return "\n".join(sorted(set_imports)) + "\n"
@@ -712,6 +717,7 @@ class TreeChunker:
     def used_import_names(
         self,
         imports: dict[str, Node],
+        globs: tuple[set, set],
         func: Node,
         context: str = "",
         module_variables: Optional[dict[str, Node]] = None,
@@ -730,10 +736,7 @@ class TreeChunker:
                         for n in self.idents_in(var_node.start, var_node.end)
                         if n in imports
                     }
-        for name in imports:
-            if "*" in name:
-                used.add(name)
-        return used
+        return used | globs[0]
 
     # -- context ---------------------------------------------------------------
 
@@ -828,6 +831,7 @@ class TreeChunker:
         src = self.src
         code = src.code
         imports = self.get_imports()
+        globs = self.glob_imports(imports)
         module_vars = self.get_module_variables()
         prefix, prefix_range = self.file_prefix()
         used_ranges: list[tuple[int, int]] = []
@@ -846,7 +850,7 @@ class TreeChunker:
         for func in self.all_functions(self.root, ""):
             docstring = self.get_docstring(func)
             context, context_no_doc = self.build_additional_context(func)
-            imports_text = self.build_imports(imports, func, context_no_doc)
+            imports_text = self.build_imports(imports, globs, func, context_no_doc)
             start_row = src.row_col(func.start)[0]
             end_row = src.row_col(func.end)[0]
             sig_row = src.row_col(self.function_signature_end(func))[0]
@@ -855,7 +859,7 @@ class TreeChunker:
             chunk_ranges: list[tuple[int, int]] = [(func.start, func.end)]
             if imports_text:
                 for imp_name in sorted(
-                    self.used_import_names(imports, func, context_no_doc, module_vars)
+                    self.used_import_names(imports, globs, func, context_no_doc, module_vars)
                 ):
                     if imp_name in imports:
                         chunk_ranges.extend(
@@ -920,7 +924,7 @@ class TreeChunker:
         for cls in self.classes_no_methods(self.root, ""):
             docstring = self.get_docstring(cls)
             class_text = self.node_with_comments(cls)
-            imports_text = self.build_imports(imports, cls, class_text)
+            imports_text = self.build_imports(imports, globs, cls, class_text)
             start_row = src.row_col(cls.start)[0]
             end_row = src.row_col(cls.end)[0]
             name = self.function_name(cls) or "unknown_class"
@@ -928,7 +932,7 @@ class TreeChunker:
             chunk_ranges = self.preceding_comment_ranges(cls)
             if imports_text:
                 for imp_name in sorted(
-                    self.used_import_names(imports, cls, class_text, None)
+                    self.used_import_names(imports, globs, cls, class_text, None)
                 ):
                     if imp_name in imports:
                         chunk_ranges.extend(

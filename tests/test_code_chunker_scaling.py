@@ -1,8 +1,10 @@
 """Code chunking time grows linearly with file size.
 
-A class's context (header, fields, constructor) is built once per class and
-the Python assignment-target set once per file; rebuilding either per
-method made chunking quadratic in the number of methods.
+A class's context (header, fields, constructor) is built once per class,
+the Python assignment-target set and the glob imports once per file;
+rebuilding any of them per chunk made chunking quadratic in the number of
+chunks.  C registers every struct as an import, so the glob scan ran over
+all of them once per function.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ import time
 import pytest
 
 from docling_core_spark.functions.code_chunker import chunk_python_code
+from docling_core_spark.functions.code_chunker_c import chunk_c_code
 from docling_core_spark.functions.code_chunker_java import chunk_java_code
 
 
@@ -36,6 +39,11 @@ def _python_module(n: int) -> str:
     return f"import os\n\nLIMIT = 3\n\n\n{funcs}"
 
 
+def _c_file(n: int) -> str:
+    # small pairs, so the per-chunk work over every struct outgrows the lexer
+    return "".join(f"struct s{i} {{ int a; }};\nint f{i}(void) {{ return {i}; }}\n" for i in range(n))
+
+
 def _best_of_3(chunker, code: str) -> float:
     best = float("inf")
     for _ in range(3):
@@ -52,8 +60,9 @@ def _best_of_3(chunker, code: str) -> float:
         (chunk_java_code, _java_class, 200),
         (chunk_python_code, _python_class, 200),
         (chunk_python_code, _python_module, 120),
+        (chunk_c_code, _c_file, 2000),
     ],
-    ids=["java_class", "python_class", "python_module"],
+    ids=["java_class", "python_class", "python_module", "c_file"],
 )
 def test_chunking_time_is_linear_in_file_size(chunker, source, n):
     small = _best_of_3(chunker, source(n))
