@@ -29,7 +29,7 @@ import re
 import sys
 import textwrap
 import unicodedata
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Iterator, Optional
 
 from docling_core_spark.functions.mdtable import format_github_table

@@ -9,7 +9,6 @@ Tests touching them are skipped when the reference checkout is absent.
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 import pytest

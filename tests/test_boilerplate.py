@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from docling_core_spark.operators.boilerplate import (
     classify_paragraphs,
     main_content,

@@ -9,8 +9,6 @@ tokenizer.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 WORDS13 = "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima mike"
 
 

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -7,7 +7,6 @@ test_hierarchy.py (file:line cited per test)."""
 
 from __future__ import annotations
 
-import json
 import re
 from pathlib import Path
 

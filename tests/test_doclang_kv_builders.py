@@ -5,8 +5,6 @@ committed *.out.json and serialize byte-equal to the *.out.dclg.xml GT)."""
 
 from __future__ import annotations
 
-import json
-
 from docling_core_spark.functions.doclang_out import export_to_doclang
 from docling_core_spark.model.doc import Doc
 

@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from docling_core_spark.functions.doclang_load import load_from_doclang
 from docling_core_spark.functions.doclang_out import export_to_doclang
 from docling_core_spark.model.doc import Doc

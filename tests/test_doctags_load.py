@@ -8,7 +8,6 @@ import pytest
 
 from docling_core_spark.functions.doctags import export_to_doctags
 from docling_core_spark.functions.doctags_load import load_from_doctags, parse_otsl_table_content
-from docling_core_spark.model.doc import Doc
 
 from .conftest import load_doc_json, load_gt, require_ref_data
 

@@ -14,9 +14,6 @@ scale shape:
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from docling_core_spark.operators.dedup import exact_substring_dedup
 
 L = 5

@@ -9,8 +9,6 @@ DuckDB oracle SQL side by side and requires identical rows.
 
 from __future__ import annotations
 
-import os
-
 import duckdb
 import pytest
 

@@ -72,8 +72,6 @@ def test_decoder_swap(spark, media):
 
 
 def test_empty_payload_isolated(spark):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame([("m0", None), ("m1", b"x")], "media_id string, data binary")
     rows = {r["media_id"]: r for r in image_metadata(df).collect()}
     assert rows["m0"]["error"] is not None  # empty payload -> per-row error

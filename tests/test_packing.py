@@ -64,8 +64,6 @@ def test_pack_doc_chunks_oversize_chunk():
 
 
 def test_pack_sequences_spark_matches_core(spark):
-    import pandas as pd
-
     from docling_core_spark.operators.packing import pack_doc_chunks, pack_sequences
 
     rows = [

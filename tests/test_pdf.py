@@ -17,7 +17,6 @@ from docling_core_spark.sources.pdf import (
     build_pdf,
     demo_pdf_dir,
     doc_to_pdf_pages,
-    parse_pdf,
     pdf_page_count,
     pdf_pages_df,
     pdf_segmented_pages,
@@ -566,8 +565,6 @@ class TestType0ToUnicode:
     """Type0/CID fonts: decode 2-byte shows via the ToUnicode CMap."""
 
     def _type0_pdf(self, cmap: bytes, hexcodes: str) -> bytes:
-        import zlib as _z
-
         content = (
             b"BT /F9 12 Tf 1 0 0 1 72 700 Tm <" + hexcodes.encode() + b"> Tj ET"
         )

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 
 def _fps(spark, rows, k=8, w=4):
-    from pyspark.sql import functions as F
-
     from docling_core_spark.operators.textstats import winnowing_fingerprints
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
