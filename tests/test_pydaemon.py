@@ -1,8 +1,10 @@
-"""The worker daemon's zipimporter patch: rescans only archives that changed."""
+"""The worker daemon: pyspark from a same-release compiled install, and a
+zipimporter patch that rescans only archives that changed."""
 
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 import zipfile
 import zipimport
@@ -47,6 +49,60 @@ def test_invalidate_caches_rereads_only_changed_archives(tmp_path, monkeypatch):
     assert importlib.import_module("pydaemon_probe_b").VALUE == "b"
 
 
+def _fake_pyspark_zip(path, version: str) -> str:
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", f"__version__: str = '{version}'\n")
+    return str(path)
+
+
+def _fake_pyspark_install(root, version: str) -> str:
+    pkg = root / "pyspark"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "version.py").write_text(f"__version__: str = '{version}'\n")
+    return str(root)
+
+
+def test_same_release_install_drops_the_zip(tmp_path):
+    zipped = _fake_pyspark_zip(tmp_path / "pyspark.zip", "4.1.2")
+    py4j = str(tmp_path / "py4j-src.zip")
+    _write_zip(py4j, {"py4j_probe": ""})
+    jar = str(tmp_path / "spark-core_2.13-4.1.2.jar")
+    _write_zip(jar, {"Probe": ""})  # an archive without pyspark is skipped
+    site = _fake_pyspark_install(tmp_path / "site", "4.1.2")
+    path = [str(tmp_path / "repo"), zipped, py4j, jar, site]
+
+    assert pydaemon.compiled_pyspark_path(path) == [str(tmp_path / "repo"), py4j, jar, site]
+
+
+def test_different_release_keeps_the_zip(tmp_path):
+    zipped = _fake_pyspark_zip(tmp_path / "pyspark.zip", "4.1.2")
+    site = _fake_pyspark_install(tmp_path / "site", "4.1.1")
+    path = [zipped, site]
+
+    assert pydaemon.compiled_pyspark_path(path) is path
+
+
+def test_no_directory_install_keeps_the_zip(tmp_path):
+    zipped = _fake_pyspark_zip(tmp_path / "pyspark.zip", "4.1.2")
+    path = [zipped, str(tmp_path / "missing"), str(tmp_path)]
+
+    assert pydaemon.compiled_pyspark_path(path) is path
+
+
+def test_an_archive_is_never_the_install(tmp_path):
+    zipped = _fake_pyspark_zip(tmp_path / "pyspark.zip", "4.1.2")
+    jar = _fake_pyspark_zip(tmp_path / "spark-core_2.13-4.1.2.jar", "4.1.2")
+    assert pydaemon.compiled_pyspark_path([zipped, jar]) == [zipped, jar]
+
+    # a shadowing jar of another release keeps every archive in place
+    jar_old = _fake_pyspark_zip(tmp_path / "spark-core_2.13-4.1.1.jar", "4.1.1")
+    site = _fake_pyspark_install(tmp_path / "site", "4.1.2")
+    path = [zipped, jar_old, site]
+    assert pydaemon.compiled_pyspark_path(path) is path
+
+
 def test_spark_workers_run_under_the_daemon(spark):
     def patched_by(_rows):
         import zipimport
@@ -55,3 +111,21 @@ def test_spark_workers_run_under_the_daemon(spark):
 
     got = spark.sparkContext.parallelize(range(4), 4).mapPartitions(patched_by).collect()
     assert set(got) == {"docling_core_spark.pydaemon"}
+
+
+def test_spark_workers_load_compiled_pyspark(spark):
+    """The JVM puts ``pyspark.zip`` first on the workers' path; on a host whose
+    driver runs a directory install of the same release, the workers load that."""
+    import pyspark
+
+    assert os.path.isfile(pyspark.__file__), "the driver's pyspark is not a directory install"
+
+    def loaded_from(_rows):
+        import zipimport
+
+        import pyspark
+
+        yield pyspark.__file__, zipimport.zipimporter.invalidate_caches.__module__
+
+    got = set(spark.sparkContext.parallelize(range(4), 4).mapPartitions(loaded_from).collect())
+    assert got == {(pyspark.__file__, "docling_core_spark.pydaemon")}
