@@ -9,6 +9,7 @@ all of them once per function.
 
 from __future__ import annotations
 
+import gc
 import time
 
 import pytest
@@ -45,11 +46,18 @@ def _c_file(n: int) -> str:
 
 
 def _best_of_3(chunker, code: str) -> float:
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = len(list(chunker(code)))
-        best = min(best, time.perf_counter() - t0)
+    # freeze the live heap: a full collection in the timed runs would walk
+    # every object the test process holds, a cost that is not the chunker's
+    gc.collect()
+    gc.freeze()
+    try:
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            n = len(list(chunker(code)))
+            best = min(best, time.perf_counter() - t0)
+    finally:
+        gc.unfreeze()
     assert n > 1
     return best
 
