@@ -51,7 +51,8 @@ established output:
   ``def`` counts too;
 - ``_is_only_function_in_class``: ``__init__`` must sit directly in the
   class body, not in an ``if`` inside it;
-- ``Source`` lines are ``str.splitlines`` lines (a form feed starts one).
+- ``Source`` lines end at ``\n``, ``\r\n`` or ``\r`` only, as ast's and
+  tokenize's lines do (a form feed does not end one).
 
 Deviation: ``match`` statements are opaque, as they always were for
 function and class collection; a ``def __init__`` inside a ``case`` no
@@ -84,13 +85,14 @@ _NODE_TYPES = {
 
 
 class _PySource(Source):
-    """Byte-offset view whose lines are ``str.splitlines`` lines, mapping
-    ast (byte column) and tokenize (character column) positions to bytes."""
+    """Byte-offset view whose lines end at ``\n``, ``\r\n`` or ``\r``, as
+    ast's and tokenize's do, mapping ast (byte column) and tokenize
+    (character column) positions to bytes."""
 
     def __init__(self, code: str):
         self.code = code
         self.data = code.encode("utf-8")
-        self.lines = [""] + code.splitlines(keepends=True)  # 1-indexed
+        self.lines = [""] + io.StringIO(code, newline="").readlines()  # 1-indexed
         self.line_starts = [0]
         for ln in self.lines[1:]:
             self.line_starts.append(self.line_starts[-1] + len(ln.encode("utf-8")))
@@ -147,7 +149,7 @@ class PythonChunker(TreeChunker):
         self.comments: list[tuple[int, int]] = []
         self.names: list[tuple[str, int]] = []  # non-keyword NAME tokens
         try:
-            for tok in tokenize.generate_tokens(io.StringIO(code).readline):
+            for tok in tokenize.generate_tokens(io.StringIO(code, newline="").readline):
                 if tok.type == tokenize.COMMENT:
                     self.comments.append((src.tok_pos(tok.start), src.tok_pos(tok.end)))
                 elif tok.type == tokenize.NAME and not keyword.iskeyword(tok.string):

@@ -79,3 +79,30 @@ def test_hierarchical_chunker_code_strategy_hook():
     assert fallback[0]["meta"]["chunk_type"] == "code_block"
     assert fallback[0]["meta"]["start_line"] == 1
     assert fallback[0]["text"] == "int main() { return 0; }"
+
+
+def _chunk_texts(code: str) -> dict:
+    chunks = chunk_python_code(code, doc_item={"self_ref": "#/texts/0"}, origin={"filename": "f.py"})
+    return {c["meta"].get("part_name", c["meta"]["chunk_type"]): c["text"] for c in chunks}
+
+
+def test_form_feed_line_does_not_shift_offsets():
+    """ast and tokenize end lines only at \\n, \\r\\n and \\r; a form feed is
+    part of its line, so every offset after one stays on its character."""
+    code = (
+        "import os\r\n\r\n\r\ndef crlf():\r\n    return os.sep\r\n\x0c\n# form feed above\n"
+        "def after_form_feed():\n    return 1\n"
+    )
+    got = _chunk_texts(code)
+    assert got["after_form_feed"].lstrip("\n") == "def after_form_feed():\n    return 1"
+    assert got["preamble"] == "# form feed above"
+    assert got == _chunk_texts(code.replace("\x0c", ""))
+
+
+def test_lone_carriage_returns_end_lines():
+    code = (
+        "import os\n\n# helper\ndef f():\n    # inside\n    return os.sep  # sep\n\n\n"
+        "class A:\n    def g(self):\n        return f()\n"
+    )
+    got = _chunk_texts(code.replace("\n", "\r"))
+    assert {k: v.replace("\r", "\n") for k, v in got.items()} == _chunk_texts(code)
