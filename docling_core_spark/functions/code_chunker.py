@@ -51,7 +51,7 @@ established output:
   ``def`` counts too;
 - ``_is_only_function_in_class``: ``__init__`` must sit directly in the
   class body, not in an ``if`` inside it;
-- ``Source`` lines end at ``\n``, ``\r\n`` or ``\r`` only, as ast's and
+- ``Source`` lines end at ``\\n``, ``\\r\\n`` or ``\\r`` only, as ast's and
   tokenize's lines do (a form feed does not end one).
 
 Deviation: ``match`` statements are opaque, as they always were for
@@ -85,7 +85,7 @@ _NODE_TYPES = {
 
 
 class _PySource(Source):
-    """Byte-offset view whose lines end at ``\n``, ``\r\n`` or ``\r``, as
+    """Byte-offset view whose lines end at ``\\n``, ``\\r\\n`` or ``\\r``, as
     ast's and tokenize's do, mapping ast (byte column) and tokenize
     (character column) positions to bytes."""
 
