@@ -33,7 +33,7 @@ def get_spark(
     holds sources only, first on the workers' path; when a directory
     install of the same pyspark release follows it, the daemon drops the
     zip and loads pyspark from the install's compiled ``__pycache__`` (daemon
-    ready in ~0.3-0.5 s instead of ~1.0-1.2 s on a 4-core host).  pyspark's
+    ready in ~0.3-0.7 s instead of ~1.0-1.7 s on a 4-core host).  pyspark's
     worker also calls ``importlib.invalidate_caches()`` at the start of
     every task, and the stock zipimporter answers by re-reading each
     archive's whole central directory, once per imported package: ~200 ms

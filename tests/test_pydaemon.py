@@ -49,10 +49,12 @@ def test_invalidate_caches_rereads_only_changed_archives(tmp_path, monkeypatch):
     assert importlib.import_module("pydaemon_probe_b").VALUE == "b"
 
 
+def _version_py(version: str) -> str:
+    return f"__version__: str = '{version}'\n"
+
+
 def _fake_pyspark_zip(path, version: str) -> str:
-    with zipfile.ZipFile(path, "w") as zf:
-        zf.writestr("pyspark/__init__.py", "")
-        zf.writestr("pyspark/version.py", f"__version__: str = '{version}'\n")
+    _write_zip(path, {"pyspark/__init__": "", "pyspark/version": _version_py(version)})
     return str(path)
 
 
@@ -60,7 +62,7 @@ def _fake_pyspark_install(root, version: str) -> str:
     pkg = root / "pyspark"
     pkg.mkdir(parents=True)
     (pkg / "__init__.py").write_text("")
-    (pkg / "version.py").write_text(f"__version__: str = '{version}'\n")
+    (pkg / "version.py").write_text(_version_py(version))
     return str(root)
 
 
@@ -104,18 +106,9 @@ def test_an_archive_is_never_the_install(tmp_path):
 
 
 def test_spark_workers_run_under_the_daemon(spark):
-    def patched_by(_rows):
-        import zipimport
-
-        yield zipimport.zipimporter.invalidate_caches.__module__
-
-    got = spark.sparkContext.parallelize(range(4), 4).mapPartitions(patched_by).collect()
-    assert set(got) == {"docling_core_spark.pydaemon"}
-
-
-def test_spark_workers_load_compiled_pyspark(spark):
-    """The JVM puts ``pyspark.zip`` first on the workers' path; on a host whose
-    driver runs a directory install of the same release, the workers load that."""
+    """The workers run under the daemon's zipimporter patch and, although the
+    JVM puts ``pyspark.zip`` first on their path, load pyspark from the same
+    directory install of the same release as the driver."""
     import pyspark
 
     assert os.path.isfile(pyspark.__file__), "the driver's pyspark is not a directory install"
@@ -125,7 +118,7 @@ def test_spark_workers_load_compiled_pyspark(spark):
 
         import pyspark
 
-        yield pyspark.__file__, zipimport.zipimporter.invalidate_caches.__module__
+        yield zipimport.zipimporter.invalidate_caches.__module__, pyspark.__file__
 
     got = set(spark.sparkContext.parallelize(range(4), 4).mapPartitions(loaded_from).collect())
-    assert got == {(pyspark.__file__, "docling_core_spark.pydaemon")}
+    assert got == {("docling_core_spark.pydaemon", pyspark.__file__)}
